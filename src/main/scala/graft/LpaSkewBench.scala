@@ -113,8 +113,7 @@ object LpaSkewBench {
         val labels0 = Materialize.eager(
           nodes.select(col("id"), col("id").as("lbl")).repartition(col("id")))
         measure("round0", labels0)
-        val labF = DebugLpa.fixpoint(nodes, edges,
-          (e, l, us, cp) => Graph.lpaRound(e, l, us, cp))
+        val labF = Graph.lpaFixpoint(nodes, edges)(Graph.lpaRound)
         measure("converged", labF.select(col("id"), col("lbl")))
         val choose = Graph.lpaChooseSkewSafe(edges)
         decisions += s""""$cname@$p":$choose"""
@@ -131,18 +130,18 @@ object LpaSkewBench {
     }
 
     // full-fixpoint wall A/B per corpus at the law width, fingerprint-
-    // checked (the DebugLpa discipline). Shapes ALTERNATE (a straight
-    // per-shape sequence hands the later shape the warmer JIT) after
-    // one untimed warmup fixpoint per corpus.
-    val shapes = Seq[(String, DebugLpa.Round)](
-      "one_exchange" -> ((e, l, us, cp) => Graph.lpaRound(e, l, us, cp)),
-      "two_exchange" -> ((e, l, us, cp) => Graph.lpaRoundSkewSafe(e, l, us, cp)))
+    // checked. Shapes ALTERNATE (a straight per-shape sequence hands
+    // the later shape the warmer JIT) after one untimed warmup
+    // fixpoint per corpus.
+    val shapes = Seq[(String, Graph.LpaRound)](
+      "one_exchange" -> (Graph.lpaRound _),
+      "two_exchange" -> (Graph.lpaRoundSkewSafe _))
     val walls = scala.collection.mutable.Map[String,
       scala.collection.mutable.ArrayBuffer[Double]]()
     var fpsEqual = true
     for ((cname, dir) <- Seq("uniform" -> baseDir, "hub" -> hubDir)) {
       val fps = scala.collection.mutable.Map[String, (Long, Long)]()
-      def runShape(shape: String, rd: DebugLpa.Round, timed: Boolean): Unit = {
+      def runShape(shape: String, rd: Graph.LpaRound, timed: Boolean): Unit = {
         CacheLedger.drain(spark); System.gc()
         val t0 = System.nanoTime()
         val t = Tables(spark, dir)
@@ -152,7 +151,7 @@ object LpaSkewBench {
           val nodes = tl.customer.select((col("c_custkey") * 2).as("id"))
             .unionAll(tl.supplier.select((col("s_suppkey") * 2 + 1).as("id")))
           val edges = Graph.mirroredTradeEdges(tl.orders, tl.lineitem)
-          try DebugLpa.fixpoint(nodes, edges, rd)
+          try Graph.lpaFixpoint(nodes, edges)(rd)
           finally Materialize.release(edges)
         }
         val fp = out.agg(count(lit(1)), coalesce(

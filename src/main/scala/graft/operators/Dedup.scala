@@ -167,45 +167,20 @@ object Dedup {
   def minhashOn(docs: DataFrame): DataFrame = {
     val (reps, membership) = collapseByText(docs)
     minhashFrom(shingleHashesOf(reps).materialized, membership)
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** Post-collapse tail of [[minhashOn]] over a CALLER-SUPPLIED
     * materialized (doc_id, h) shingle-hash set + membership (the
     * ngramJaccardFrom convention): [[dedupEval]] derives the hash set
     * from its one shared shingle scan instead of re-deriving the
-    * corpus. Identical output by construction — same code path.
+    * corpus. Identical row set by construction — same code path;
+    * unordered rows (the [[Text.ngramJaccardFrom]] rationale).
     */
   private[graft] def minhashFrom(sh: DataFrame,
       membership: DataFrame): DataFrame =
     expandPairs(minhashPairs(sh), membership, "d1", "d2",
         "jaccard", lit(1.0), sh.select(col("doc_id")).distinct())
-      .orderBy(col("d1"), col("d2"))
-
-  /** [[minhashFrom]] without the presentation sort (the
-    * [[Text.ngramJaccardFromUnordered]] rationale — the dedup_eval
-    * artifact path feeds aggregations only).
-    */
-  private[graft] def minhashFromUnordered(sh: DataFrame,
-      membership: DataFrame): DataFrame =
-    stripTrailingSort(minhashFrom(sh, membership))
-
-  /** Drop a frame's top-level global Sort (and nothing deeper): the
-    * single-definition way to expose an unordered ARTIFACT shape of
-    * an operator whose public contract is ordered output, without
-    * duplicating its body. Identity when the plan has no trailing
-    * sort.
-    */
-  private[operators] def stripTrailingSort(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
-    df.queryExecution.analyzed match {
-      case s: Sort if s.global =>
-        org.apache.spark.sql.graftbridge.Bridge.ofRows(df.sparkSession, s.child)
-      case Project(list, s: Sort) if s.global =>
-        org.apache.spark.sql.graftbridge.Bridge.ofRows(df.sparkSession,
-          Project(list, s.child))
-      case _ => df
-    }
-  }
 
   /** LSH band-bucket candidate pairs over a (doc_id, h) shingle-hash
     * set — the stage whose volume the skew guard bounds (DupSkewSpec
@@ -764,9 +739,11 @@ object Dedup {
     */
   private[graft] def ngramJaccardPairs(spark: SparkSession,
       dir: String): DataFrame =
-    pairArtifact("ngram_jaccard", dir, spark)(
-      stripTrailingSort(graft.operators.Text.ngramJaccard(spark, dir))
-        .select(col("d1"), col("d2")))
+    pairArtifact("ngram_jaccard", dir, spark) {
+      val (reps, membership) = collapseByText(Tables(spark, dir).documents)
+      Text.ngramJaccardFrom(Text.shingleSetOf(reps).materialized, membership, 0.5)
+        .select(col("d1"), col("d2"))
+    }
 
   /** Cluster-LABEL artifact (the pairArtifact contract applied to the
     * connected-component labels): the default-parameter clustering is
@@ -841,27 +818,25 @@ object Dedup {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val methods: Seq[(String, DataFrame)] =
       try {
-        // each arm materializes its UNORDERED artifact shape (round
-        // 16): the grading below and split_leak's cells aggregate, so
-        // the methods' presentation sorts (a bounds-sampling job + a
-        // range exchange + a per-partition sort, per arm) are dead
-        // weight here — see ngramJaccardFromUnordered
+        // each arm materializes the core's UNORDERED rows: the
+        // grading below and split_leak's cells aggregate, so a
+        // presentation sort would be dead weight here
         val futs = Seq(
           "ngram_jaccard" -> scala.concurrent.Future(
             pairArtifact("ngram_jaccard", dir, spark)( // graded 4x
-              Text.ngramJaccardFromUnordered(shingleSet, collapsed._2, 0.5)
+              Text.ngramJaccardFrom(shingleSet, collapsed._2, 0.5)
                 .select(col("d1"), col("d2")))),
           "dedup_minhash" -> scala.concurrent.Future(
             pairArtifact("dedup_minhash", dir, spark)(
-              minhashFromUnordered(shingleHash, collapsed._2)
+              minhashFrom(shingleHash, collapsed._2)
                 .select(col("d1"), col("d2")))),
           "winnow_pairs" -> scala.concurrent.Future(
             pairArtifact("winnow_pairs", dir, spark)(
-              Text.winnowPairsCollapsedUnordered(collapsed._1, collapsed._2)
+              Text.winnowPairsCollapsed(collapsed._1, collapsed._2)
                 .select(col("id1").as("d1"), col("id2").as("d2")))),
           "dedup_fuzzy_text" -> scala.concurrent.Future(
             pairArtifact("dedup_fuzzy_text", dir, spark)(
-              Text.dedupFuzzyTextCollapsedUnordered(collapsed._1, collapsed._2)
+              Text.dedupFuzzyTextCollapsed(collapsed._1, collapsed._2)
                 .select(col("id1").as("d1"), col("id2").as("d2")))))
         futs.map { case (n, f) =>
           n -> scala.concurrent.Await.result(f,
@@ -934,6 +909,24 @@ object Dedup {
     * total broadcast in (the dedup_eval scalar pattern).
     */
   def clusterStats(spark: SparkSession, dir: String): DataFrame = {
+    val rolled = clusterRollup(spark, dir)
+    val total = rolled.filter(col("size_class").isNull)
+      .select(coalesce(col("class_words"), lit(0L)).as("total_words"))
+    rolled.filter(col("size_class").isNotNull)
+      .crossJoin(broadcast(total))
+      .select(col("size_class"), col("n_clusters"), col("n_docs"),
+        col("n_removable"), col("removable_words"),
+        expr("CASE WHEN total_words = 0 THEN 0L " +
+          "ELSE removable_words * 1000000 div total_words END")
+          .as("removable_ppm"))
+      .orderBy(col("size_class"))
+  }
+
+  /** [[clusterStats]]' materialized size-class rollup: one row per
+    * size class plus the null-key grand-total row, whose
+    * `class_words` is the corpus word total.
+    */
+  private[graft] def clusterRollup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
     val labels = labelArtifact(spark, dir)
     val nw = docs.select(col("doc_id"),
@@ -943,7 +936,8 @@ object Dedup {
     // once more for the 1-row corpus word total (two subtrees over
     // the same source never share a scan). Every doc carries a label
     // row (the clusters contract: one row per doc, singletons
-    // keeper-flagged), so the total is Σ cluster word mass —
+    // keeper-flagged; DedupAnnSpec checks the total against a plain
+    // documents scan), so the total is Σ cluster word mass —
     // rollup(size_class) folds it into the SAME aggregation as the
     // null-key grand-total row (size_class = least(csize, cap) is
     // never null, so the null row is unambiguous). The ≤10-row result
@@ -955,7 +949,7 @@ object Dedup {
         sum(when(col("is_keeper") === 0, col("nw")).otherwise(lit(0L)))
           .as("rm_words"),
         sum(col("nw")).as("cl_words"))
-    val rolled = perCluster
+    perCluster
       .withColumn("size_class", least(col("csize"), lit(ClusterSizeCap)))
       .rollup(col("size_class"))
       .agg(count(lit(1)).as("n_clusters"),
@@ -964,16 +958,6 @@ object Dedup {
         sum(col("rm_words")).as("removable_words"),
         sum(col("cl_words")).as("class_words"))
       .materialized
-    val total = rolled.filter(col("size_class").isNull)
-      .select(coalesce(col("class_words"), lit(0L)).as("total_words"))
-    rolled.filter(col("size_class").isNotNull)
-      .crossJoin(broadcast(total))
-      .select(col("size_class"), col("n_clusters"), col("n_docs"),
-        col("n_removable"), col("removable_words"),
-        expr("CASE WHEN total_words = 0 THEN 0L " +
-          "ELSE removable_words * 1000000 div total_words END")
-          .as("removable_ppm"))
-      .orderBy(col("size_class"))
   }
 
   /** Fixed-point scale for [[lshTune]]'s S-curve recurrence — large

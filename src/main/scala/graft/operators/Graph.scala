@@ -550,8 +550,13 @@ object Graph {
     * half-rounds (always even — cycle granularity), converged as
     * BIGINT 0/1 (the scd2 is_current convention) — and the caller
     * owns its release.
+    *
+    * `round` is the half-round shape; the default is the measured
+    * choice ([[lpaMeasuredRound]]). The spec and LpaSkewBench pass a
+    * fixed shape to compare both through this same loop.
     */
-  private[graft] def lpaFixpoint(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  private[graft] def lpaFixpoint(nodes: DataFrame, edges: DataFrame)(
+      round: LpaRound = lpaMeasuredRound(edges)): DataFrame = {
     // initial state hash(id)-partitioned so every round's label join
     // and join-back run zero-exchange (the pagerank base convention)
     var labels = nodes.select(col("id"), col("id").as("lbl"))
@@ -560,20 +565,11 @@ object Graph {
     // the law is even by construction (4·bits + 8, clamps 16/96) —
     // cycle stepping and the SQL LEAST(conv, cap) replay rely on it
     require(cap % 2 == 0, s"lpaCapHalfRounds must be even, got $cap")
-    // hub graphs take the skew-safe two-exchange half-round; the
-    // decision is one (often short-circuited) agg — see
-    // [[lpaChooseSkewSafe]] — and both shapes are label-identical
-    val skewSafe = lpaChooseSkewSafe(edges)
-    def round(e: DataFrame, l: DataFrame, us: Boolean,
-        cp: Boolean = false): DataFrame =
-      if (skewSafe) lpaRoundSkewSafe(e, l, us, cp) else lpaRound(e, l, us, cp)
     var r = 0
     var converged = false
     while (!converged && r < cap) {
-      val half1 = Materialize.round(
-        round(edges, labels, us = false))
-      val half2 = Materialize.round(
-        round(edges, half1, us = true, cp = true))
+      val half1 = Materialize.round(round(edges, labels, false, false))
+      val half2 = Materialize.round(round(edges, half1, true, true))
       // the one per-cycle action (empty corpus ⇒ SUMs are NULL ⇒ 0)
       val row = half2.agg(
         coalesce(sum(col("pchg")), lit(0L)).as("c1"),
@@ -590,6 +586,17 @@ object Graph {
     Materialize.release(labels)
     out
   }
+
+  /** An LPA half-round: (edges, labels, updateSuppliers, carryPrev). */
+  private[graft] type LpaRound = (DataFrame, DataFrame, Boolean, Boolean) => DataFrame
+
+  /** The shipped half-round choice: hub graphs take the skew-safe
+    * two-exchange shape. The decision is one (often short-circuited)
+    * agg — see [[lpaChooseSkewSafe]] — and both shapes are
+    * label-identical.
+    */
+  private[graft] def lpaMeasuredRound(edges: DataFrame): LpaRound =
+    if (lpaChooseSkewSafe(edges)) lpaRoundSkewSafe else lpaRound
 
   /** Corpus-dir labeling through the [[lpaCache]] artifact: a cold
     * call runs [[lpaFixpoint]] (borrowing `sharedEdges` if the
@@ -611,7 +618,7 @@ object Graph {
         val nodes = tradeNodes(t.customer, t.supplier)
         val edges = sharedEdges.map(PlanScope.rebind(loop, _))
           .getOrElse(mirroredTradeEdges(t.orders, t.lineitem))
-        try lpaFixpoint(nodes, edges)
+        try lpaFixpoint(nodes, edges)()
         finally if (sharedEdges.isEmpty) Materialize.release(edges)
       }
     }
@@ -688,7 +695,7 @@ object Graph {
         PlanScope.rebind(loop, lineitem))
       val labels =
         try lpaFixpoint(tradeNodes(PlanScope.rebind(loop, customer),
-          PlanScope.rebind(loop, supplier)), edges)
+          PlanScope.rebind(loop, supplier)), edges)()
         finally Materialize.release(edges)
       val out = Materialize.eager(communitiesFrom(labels))
       Materialize.release(labels)
@@ -751,7 +758,7 @@ object Graph {
         PlanScope.rebind(loop, lineitem))
       try {
         val labels = lpaFixpoint(tradeNodes(PlanScope.rebind(loop, customer),
-          PlanScope.rebind(loop, supplier)), edges)
+          PlanScope.rebind(loop, supplier)), edges)()
         val out = gradeCommunities(labels, edges)
         Materialize.release(labels)
         out
@@ -769,7 +776,8 @@ object Graph {
     // the m_mir count. The neighbor-label counts subsume all three on
     // a MIRRORED list — see [[gradeCombined]]/[[gradeCard]] (factored
     // so the plan is directly dumpable despite the construction-time
-    // materialization; DebugCs prints both subtrees).
+    // materialization; phase and row-count evidence in EVIDENCE_r16.md
+    // §2).
     val combined = Materialize.eager(gradeCombined(labels, edges))
     val out = Materialize.eager(gradeCard(labels, combined))
     Materialize.release(combined)
@@ -857,7 +865,7 @@ object Graph {
     // ALONE satisfies BOTH aggregations' required distribution (dst ⊆
     // {dst, lbl}) and the join-back's, so the count, the argmax and
     // the label join all plan zero-exchange behind one 16 B/row
-    // exchange. Measured (DebugLpa, fingerprint-identical labels):
+    // exchange. Measured (EVIDENCE_r15.md, fingerprint-identical labels):
     // r20 fixpoint 18.3-23.7 → 16.5-17.6 s, sf0.1 ~5% — the win is
     // the removed exchange and grows with graph size. The trade is
     // skew: EVERY edge of a hub dst transits ONE partition here (the

@@ -81,10 +81,13 @@ object Health {
     * tumbling window (1 h here; 1 min in the reference — same
     * machinery) per patient with avg/min/max/count and the window
     * classification, emitting the alert record shape of
-    * src/flink_job.py:113-122. One shuffle on (user, window).
+    * src/flink_job.py:113-122. One shuffle on (user, window). The
+    * composed cards (hr_episodes, hr_alert_stats) consume the
+    * unordered rows; only the registered query sorts.
     */
   def hrWindowTumbling(spark: SparkSession, dir: String): DataFrame =
     hrWindowTumblingOn(Tables(spark, dir).events)
+      .orderBy(col("user_id"), col("window_start_ms"))
 
   private[graft] def hrWindowTumblingOn(ev: DataFrame): DataFrame = {
     ev.groupBy(col("user_id"), window(col("ts"), "1 hour").as("w"))
@@ -99,7 +102,6 @@ object Health {
         epochMs(col("w.end")).as("window_end_ms"),
         col("avg_hr"), col("min_hr"), col("max_hr"), col("n_readings"),
         classifyWindow(col("avg_hr")).as("alert_type"))
-      .orderBy(col("user_id"), col("window_start_ms"))
   }
 
   /** hr_window_sliding — sliding event-time windows (1 h size, 15 min

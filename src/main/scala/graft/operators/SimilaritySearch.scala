@@ -897,7 +897,11 @@ object SimilaritySearch {
     */
   def knnGraph(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
     knnGraphOn(embDouble(spark, dir).filter(col("v").isNotNull), k)
+      .orderBy(col("src"), col("rank"))
 
+  /** [[knnGraph]]'s unordered rows — [[contrastivePairsOn]] windows
+    * over them directly.
+    */
   private[graft] def knnGraphOn(emb: DataFrame, k: Int,
       denseN: Long = KnnDenseN,
       probeBudgetPct: Long = KnnProbeBudgetPct): DataFrame = {
@@ -992,7 +996,6 @@ object SimilaritySearch {
     topk
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("src"), col("dst"), col("rank"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("src"), col("rank"))
   }
 
   /** Hard negatives kept per anchor by [[contrastivePairs]]. */

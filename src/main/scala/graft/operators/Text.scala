@@ -82,6 +82,7 @@ object Text {
   private[graft] def ngramJaccardDocs(docs: DataFrame, threshold: Double): DataFrame = {
     val (reps, membership) = Dedup.collapseByText(docs)
     ngramJaccardFrom(shingleSetOf(reps).materialized, membership, threshold)
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** The post-collapse tail of [[ngramJaccardDocs]] over a CALLER-
@@ -89,26 +90,18 @@ object Text {
     * [[Dedup.dedupEval]] feed one shared collapse + shingle scan to
     * every shingle-derived method instead of re-deriving the corpus
     * per method (the r10 cold-cost item). Same code path, so the
-    * output is identical to the standalone operator by construction.
+    * row set is identical to the standalone operator by construction.
+    *
+    * Rows come back UNORDERED: dedup_eval's grading and split_leak's
+    * cells are aggregations, so a global range-sort here (bounds-
+    * sampling job + range exchange + per-partition sort, once per
+    * method arm) would buy nothing. The ordered caller
+    * ([[ngramJaccardDocs]]) sorts at the edge.
     */
   private[graft] def ngramJaccardFrom(sh: DataFrame, membership: DataFrame,
       threshold: Double): DataFrame =
     Dedup.expandPairs(ngramJaccardOn(sh, threshold), membership,
         "d1", "d2", "jaccard", lit(1.0), sh.select(col("doc_id")).distinct())
-      .orderBy(col("d1"), col("d2"))
-
-  /** [[ngramJaccardFrom]] without the presentation sort — the pair
-    * ARTIFACT shape (round 16): dedup_eval's grading and split_leak's
-    * cells are aggregations, so materializing the artifact through a
-    * global range-sort (bounds-sampling job + range exchange + per-
-    * partition sort, once per method arm) bought nothing (guide §2.4:
-    * an orderBy used only to make output deterministic). The
-    * registered query keeps its ordered contract above; the row SET
-    * is identical by construction ([[Dedup.stripTrailingSort]]).
-    */
-  private[graft] def ngramJaccardFromUnordered(sh: DataFrame,
-      membership: DataFrame, threshold: Double): DataFrame =
-    Dedup.stripTrailingSort(ngramJaccardFrom(sh, membership, threshold))
 
   /** Auto-selecting Jaccard over any (doc_id, shingle) set. */
   private[graft] def ngramJaccardOn(shingles: DataFrame, threshold: Double): DataFrame = {
@@ -1047,11 +1040,11 @@ object Text {
 
   private[graft] def winnowPairsOn(docs: DataFrame): DataFrame = {
     val (reps, membership) = Dedup.collapseByText(docs)
-    winnowPairsCollapsed(reps, membership)
+    winnowPairsCollapsed(reps, membership).orderBy(col("id1"), col("id2"))
   }
 
   /** Post-collapse tail of [[winnowPairsOn]] (the ngramJaccardFrom
-    * convention — shares the caller's collapse).
+    * convention — shares the caller's collapse; unordered rows).
     */
   private[graft] def winnowPairsCollapsed(reps: DataFrame,
       membership: DataFrame): DataFrame = {
@@ -1085,7 +1078,6 @@ object Text {
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
         col("a.nf").as("shared"), col("a.nf").as("nf1"), col("b.nf").as("nf2"))
     cross.unionByName(within)
-      .orderBy(col("id1"), col("id2"))
   }
 
   /** winnow_clusters — the passage-level KEEP-LIST: connected
@@ -1468,20 +1460,6 @@ object Text {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** [[winnowPairsCollapsed]] without the presentation sort (the
-    * [[ngramJaccardFromUnordered]] rationale).
-    */
-  private[graft] def winnowPairsCollapsedUnordered(reps: DataFrame,
-      membership: DataFrame): DataFrame =
-    Dedup.stripTrailingSort(winnowPairsCollapsed(reps, membership))
-
-  /** [[dedupFuzzyTextCollapsed]] without the presentation sort (the
-    * [[ngramJaccardFromUnordered]] rationale).
-    */
-  private[graft] def dedupFuzzyTextCollapsedUnordered(reps: DataFrame,
-      membership: DataFrame): DataFrame =
-    Dedup.stripTrailingSort(dedupFuzzyTextCollapsed(reps, membership))
-
   /** dedup_fuzzy_text — FULL-TEXT edit-distance near-dup pairs
     * (closing [[dedupFuzzy]]'s blind spot: that variant matches on
     * the 64-char normalized prefix, so an OCR-corrupted tail beyond
@@ -1527,11 +1505,11 @@ object Text {
     // text; the PassJoin machinery runs over reps and pairs expand
     // through membership (dist = 0 within a group)
     val (reps, membership) = Dedup.collapseByText(docs)
-    dedupFuzzyTextCollapsed(reps, membership)
+    dedupFuzzyTextCollapsed(reps, membership).orderBy(col("id1"), col("id2"))
   }
 
   /** Post-collapse tail of [[dedupFuzzyTextOn]] (the ngramJaccardFrom
-    * convention — shares the caller's collapse).
+    * convention — shares the caller's collapse; unordered rows).
     */
   private[graft] def dedupFuzzyTextCollapsed(reps: DataFrame,
       membership: DataFrame): DataFrame = {
@@ -1604,7 +1582,6 @@ object Text {
       .select(col("id1"), col("id2"), col("dist").cast("long").as("dist"))
     Dedup.expandPairs(repPairs, membership, "id1", "id2", "dist", lit(0L),
         d.filter(col("len") >= 1L).select(col("doc_id")))
-      .orderBy(col("id1"), col("id2"))
   }
 
   /** Minimum duplicated-span length, in words, for [[dedupSpans]].

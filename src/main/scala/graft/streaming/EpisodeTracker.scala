@@ -26,7 +26,10 @@ final case class OpenEpisode(
     start: java.sql.Timestamp,
     end: java.sql.Timestamp,
     n_windows: Int,
-    peak_avg_hr: Double)
+    peak_avg_hr: Double) {
+  def closed(patientId: String): Episode =
+    Episode(patientId, episode_type, start, end, n_windows, peak_avg_hr)
+}
 
 /** Custom keyed state on top of the window alerts — the Spark
   * analog of Flink keyed ProcessFunction state the reference's
@@ -41,40 +44,50 @@ final case class OpenEpisode(
   */
 object EpisodeTracker {
 
-  def trackEpisodes(useTimeout: Boolean)(patientId: String, rows: Iterator[WindowAlert],
-      state: GroupState[OpenEpisode]): Iterator[Episode] = {
-    val sorted = rows.toSeq.sortBy(_.window_start.getTime)
-    var open = state.getOption
+  /** The run fold both trackers share: window alerts, in window
+    * order, extend the open run while the type repeats; a type change
+    * or a normal window closes it. Returns the closed episodes and the
+    * run still open afterwards.
+    */
+  private[streaming] def foldRuns(patientId: String, open: Option[OpenEpisode],
+      rows: Iterator[WindowAlert]): (Seq[Episode], Option[OpenEpisode]) = {
+    var cur = open
     val out = Seq.newBuilder[Episode]
-    for (a <- sorted) {
-      open match {
+    for (a <- rows.toSeq.sortBy(_.window_start.getTime)) {
+      cur match {
         case Some(ep) if a.alert_type == ep.episode_type =>
-          open = Some(ep.copy(
+          cur = Some(ep.copy(
             end = a.window_end,
             n_windows = ep.n_windows + 1,
             peak_avg_hr = math.max(ep.peak_avg_hr, a.avg_hr)))
         case Some(ep) =>
-          out += Episode(patientId, ep.episode_type, ep.start, ep.end,
-            ep.n_windows, ep.peak_avg_hr)
-          open =
+          out += ep.closed(patientId)
+          cur =
             if (a.alert_type == "normal") None
             else Some(OpenEpisode(a.alert_type, a.window_start, a.window_end, 1, a.avg_hr))
         case None =>
           if (a.alert_type != "normal")
-            open = Some(OpenEpisode(a.alert_type, a.window_start, a.window_end, 1, a.avg_hr))
+            cur = Some(OpenEpisode(a.alert_type, a.window_start, a.window_end, 1, a.avg_hr))
       }
     }
+    (out.result(), cur)
+  }
+
+  def trackEpisodes(useTimeout: Boolean)(patientId: String, rows: Iterator[WindowAlert],
+      state: GroupState[OpenEpisode]): Iterator[Episode] = {
+    val (closed, open) = foldRuns(patientId, state.getOption, rows)
     if (state.hasTimedOut) {
-      open.foreach(ep => out += Episode(patientId, ep.episode_type, ep.start, ep.end,
-        ep.n_windows, ep.peak_avg_hr))
       state.remove()
-    } else open match {
-      case Some(ep) =>
-        state.update(ep)
-        if (useTimeout) state.setTimeoutDuration("10 minutes")
-      case None => state.removeIfExists()
+      (closed ++ open.map(_.closed(patientId))).iterator
+    } else {
+      open match {
+        case Some(ep) =>
+          state.update(ep)
+          if (useTimeout) state.setTimeoutDuration("10 minutes")
+        case None => state.removeIfExists()
+      }
+      closed.iterator
     }
-    out.result().iterator
   }
 
   /** Wire the tracker over a stream (or batch Dataset in tests) of

@@ -35,33 +35,11 @@ object EpisodeTrackerV2 {
       open = getHandle.getValueState[OpenEpisode]("open",
         Encoders.product[OpenEpisode], TTLConfig.NONE)
 
-    private def closed(patientId: String, ep: OpenEpisode): Episode =
-      Episode(patientId, ep.episode_type, ep.start, ep.end, ep.n_windows, ep.peak_avg_hr)
-
     override def handleInputRows(
         patientId: String,
         rows: Iterator[WindowAlert],
         timers: TimerValues): Iterator[Episode] = {
-      val sorted = rows.toSeq.sortBy(_.window_start.getTime)
-      var cur = Option(open.get())
-      val out = Seq.newBuilder[Episode]
-      for (a <- sorted) {
-        cur match {
-          case Some(ep) if a.alert_type == ep.episode_type =>
-            cur = Some(ep.copy(
-              end = a.window_end,
-              n_windows = ep.n_windows + 1,
-              peak_avg_hr = math.max(ep.peak_avg_hr, a.avg_hr)))
-          case Some(ep) =>
-            out += closed(patientId, ep)
-            cur =
-              if (a.alert_type == "normal") None
-              else Some(OpenEpisode(a.alert_type, a.window_start, a.window_end, 1, a.avg_hr))
-          case None =>
-            if (a.alert_type != "normal")
-              cur = Some(OpenEpisode(a.alert_type, a.window_start, a.window_end, 1, a.avg_hr))
-        }
-      }
+      val (closed, cur) = EpisodeTracker.foldRuns(patientId, Option(open.get()), rows)
       // one timer per key: re-arm at the newest window's end + gap
       getHandle.listTimers().foreach(getHandle.deleteTimer)
       cur match {
@@ -70,14 +48,14 @@ object EpisodeTrackerV2 {
           getHandle.registerTimer(ep.end.getTime + flushGapMs)
         case None => open.clear()
       }
-      out.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(
         patientId: String,
         timers: TimerValues,
         expired: ExpiredTimerInfo): Iterator[Episode] = {
-      val out = Option(open.get()).map(closed(patientId, _))
+      val out = Option(open.get()).map(_.closed(patientId))
       open.clear()
       out.iterator
     }

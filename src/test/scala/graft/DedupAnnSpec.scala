@@ -812,6 +812,19 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(card.map(_._3).sum == labels.length)
   }
 
+  test("cluster_stats: the rollup's grand-total row is the corpus word total") {
+    // the card's ppm denominator is the rollup's null-key row, which
+    // equals the corpus total only if every document carries exactly
+    // one label row — checked against an independent documents scan
+    val total = graft.operators.Dedup.clusterRollup(spark, sf)
+      .filter(col("size_class").isNull).select(col("class_words")).head().getLong(0)
+    val expect = Tables(spark, sf).documents
+      .agg(sum(size(graft.functions.TextFunctions.words(col("text"))).cast("long")))
+      .head().getLong(0)
+    assert(expect > 0L, "fixture corpus has no words")
+    assert(total == expect, s"rollup word total $total != corpus word total $expect")
+  }
+
   test("lsh_tune: S-curve recurrence ≡ exact rational, anchors and monotonicity hold") {
     import graft.operators.Dedup
     // the scaled floor recurrence must agree with the exact rational
@@ -892,40 +905,33 @@ class DedupAnnSpec extends AnyFunSuite {
   }
 
   test("unordered pair-artifact shapes: same row set as the ordered operators, no global sort planned") {
-    // round 16: dedup_eval / split_leak materialize each method's
-    // pair artifact UNORDERED (the grading is aggregation) — the set
-    // must match the registered ordered output exactly, and the
-    // artifact plan must not pay the range-sort exchange
+    // dedup_eval / split_leak materialize each method's pair artifact
+    // from the UNORDERED core (the grading is aggregation) — its row
+    // set must match the registered query's exactly, the registered
+    // query must stay sorted, and the core's plan must not pay the
+    // range-sort exchange
     val docs = Tables(spark, sf).documents
     val (reps, membership) = operators.Dedup.collapseByText(docs)
     val sh = operators.Text.shingleSetOf(reps).localCheckpoint(true)
     val shH = sh.select(col("doc_id"),
       pmod(graft.functions.TextFunctions.hash60(col("shingle")),
         lit(operators.Dedup.P)).as("h")).distinct().localCheckpoint(true)
-    val cases: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
-      ("ngram_jaccard",
-        operators.Text.ngramJaccardFrom(sh, membership, 0.5),
-        operators.Text.ngramJaccardFromUnordered(sh, membership, 0.5)),
-      ("dedup_minhash",
-        operators.Dedup.minhashFrom(shH, membership),
-        operators.Dedup.minhashFromUnordered(shH, membership)),
-      ("winnow_pairs",
-        operators.Text.winnowPairsCollapsed(reps, membership),
-        operators.Text.winnowPairsCollapsedUnordered(reps, membership)),
-      ("dedup_fuzzy_text",
-        operators.Text.dedupFuzzyTextCollapsed(reps, membership),
-        operators.Text.dedupFuzzyTextCollapsedUnordered(reps, membership)))
-    cases.foreach { case (name, ordered, unordered) =>
-      val a = ordered.collect().map(_.toSeq).toSeq
-      val b = unordered.collect().map(_.toSeq).toSeq
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "ngram_jaccard" -> operators.Text.ngramJaccardFrom(sh, membership, 0.5),
+      "dedup_minhash" -> operators.Dedup.minhashFrom(shH, membership),
+      "winnow_pairs" -> operators.Text.winnowPairsCollapsed(reps, membership),
+      "dedup_fuzzy_text" -> operators.Text.dedupFuzzyTextCollapsed(reps, membership))
+    cases.foreach { case (name, core) =>
+      val a = SparkEntry.queries(name)(spark, sf).collect().map(_.toSeq).toSeq
+      val b = core.collect().map(_.toSeq).toSeq
       assert(a.nonEmpty, s"$name: fixture produced no pairs")
       assert(a.sortBy(_.toString) == b.sortBy(_.toString),
-        s"$name: unordered artifact row set diverges")
+        s"$name: core row set diverges from the registered query")
       assert(a == a.sortBy(r => (r.head.asInstanceOf[Long], r(1).asInstanceOf[Long])),
-        s"$name: ordered operator output is not sorted")
-      val plan = unordered.queryExecution.executedPlan.toString
+        s"$name: registered query output is not sorted")
+      val plan = core.queryExecution.executedPlan.toString
       assert(!plan.contains("rangepartitioning"),
-        s"$name: unordered artifact still plans a global sort:\n$plan")
+        s"$name: unordered core still plans a global sort:\n$plan")
     }
   }
 }

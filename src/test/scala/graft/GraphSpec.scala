@@ -486,14 +486,13 @@ class GraphSpec extends AnyFunSuite {
       assert(a.collect().map(_.toSeq).toSet == b.collect().map(_.toSeq).toSet,
         "round shapes diverge on the hub fixture")
       // full-fixpoint fingerprints must also match (both sides, all rounds)
-      def fp(rd: DebugLpa.Round): Seq[Seq[Any]] = {
-        val out = DebugLpa.fixpoint(nodes, edges, rd)
+      def fp(rd: operators.Graph.LpaRound): Seq[Seq[Any]] = {
+        val out = operators.Graph.lpaFixpoint(nodes, edges)(rd)
         val rows = out.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
         Materialize.release(out)
         rows
       }
-      assert(fp((e, l, us, cp) => operators.Graph.lpaRound(e, l, us, cp)) ==
-        fp((e, l, us, cp) => operators.Graph.lpaRoundSkewSafe(e, l, us, cp)),
+      assert(fp(operators.Graph.lpaRound) == fp(operators.Graph.lpaRoundSkewSafe),
         "fixpoint labelings diverge between round shapes")
       // plan shape: the count's grouping key IS the exchange key, so
       // the map-side combine runs BEFORE the exchange; the agg path's

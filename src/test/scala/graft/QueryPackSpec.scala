@@ -19,6 +19,11 @@ class QueryPackSpec extends AnyFunSuite {
     }
   }
 
+  test("PlanDump prints the AQE-final plan of the query that ran") {
+    val plan = PlanDump.executed(SparkEntry.queries("q1_agg")(spark, sf))
+    assert(plan.contains("isFinalPlan=true"), s"not the final plan:\n$plan")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -111,9 +116,21 @@ class QueryPackSpec extends AnyFunSuite {
       "q24_funnel", "freq_words", "sketch_cube", "word_pmi",
       "bm25_search", "drift_check", "hybrid_search",
       "quality_ensemble")
+    // ordering lives at the edge: a global Sort the optimizer keeps
+    // below the root is a range exchange nobody reads in order —
+    // only a Limit (top-k) may consume one
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Sort}
+    def sortBelow(parent: LogicalPlan): Boolean = parent.children.exists {
+      case s: Sort if s.global && !parent.isInstanceOf[LocalLimit] &&
+          !parent.isInstanceOf[GlobalLimit] => true
+      case c => sortBelow(c)
+    }
+    val interiorSorted = Seq.newBuilder[String]
     for ((name, fn) <- SparkEntry.queries) {
       spark.catalog.clearCache()
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+      val df = fn(spark, sf)
+      if (sortBelow(df.queryExecution.optimizedPlan)) interiorSorted += name
+      val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian product:\n$plan")
       if (!bnljOk(name))
@@ -129,6 +146,8 @@ class QueryPackSpec extends AnyFunSuite {
         assert(plan.split("Exchange SinglePartition").length - 1 == 1,
           s"$name: expected exactly one scalar-aggregate single-partition exchange:\n$plan")
     }
+    assert(interiorSorted.result().isEmpty,
+      s"global sort kept below the root in: ${interiorSorted.result().sorted.mkString(", ")}")
     // driver-loop operators (bpe_train, dedup/winnow_clusters) run
     // their rounds during construction, so the sweep above sees only
     // the final assembly — assert the ROUND plans via the factored
