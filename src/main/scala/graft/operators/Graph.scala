@@ -768,6 +768,14 @@ object Graph {
 
   /** The modularity-card passes over a finished labeling (EAGER
     * result — safe to release `edges` and `labels` after the call).
+    *
+    * Label coverage is a precondition: `m_mir` and `degree_sum` are
+    * summed over the src-label join, so an edge whose source node has
+    * no row in `labels` is excluded from both, silently. The trade
+    * graph meets it (every edge endpoint is a customer or supplier
+    * node, and the labeling covers every node); a corpus with orphan
+    * foreign keys would not, and GraphSpec pins the equality on the
+    * fixture.
     */
   private[graft] def gradeCommunities(labels: DataFrame, edges: DataFrame): DataFrame = {
     // ONE pass over the edge list (round 16, guide §1.2/§2.3): the

@@ -400,6 +400,17 @@ class GraphSpec extends AnyFunSuite {
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
     val mirrored = pairs.flatMap { case (c, s) => Seq(c -> s, s -> c) }
     val mMir = mirrored.length.toLong
+    // the card's label-coverage contract: m_mir and degree_sum come
+    // from the src-label join, so every edge source must carry a label
+    // row (an unlabeled source would drop out of both silently)
+    val edges = operators.Graph.mirroredTradeEdges(t.orders, t.lineitem)
+    try {
+      val lbl = operators.Graph.graphCommunities(spark, sf)
+        .select(col("node_id").as("id"), col("community").as("lbl"))
+      val n = edges.count()
+      val joined = operators.Graph.gradeCombined(lbl, edges).agg(sum(col("pc"))).head.getLong(0)
+      assert(n == mMir && joined == mMir, s"edges $n, src-label join $joined, reference $mMir")
+    } finally Materialize.release(edges)
     val deg = mirrored.groupBy(_._1).map { case (n, es) => n -> es.length.toLong }
     // convergence meta from the in-JVM fixpoint reference
     val nodes = (t.customer.select(col("c_custkey") * 2).collect().map(_.getLong(0)) ++

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import graft.streaming._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -75,6 +81,56 @@ class StreamingSpec extends AnyFunSuite {
         assert(s.contains(s""""$f""""), s"missing $f in $s")
       assert(s.contains(""""alert_type":"tachycardia""""))
     } finally q.stop()
+  }
+
+  test("a checkpointed alert stream to a file sink starts no chmod/readlink/ls/stat process") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-fork-free")
+    val ckpt = dir.resolve("checkpoint")
+    val input = MemoryStream[String]
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val q = HealthMonitor.alertJson(HealthMonitor.alerts(input.toDF().toDF("value")))
+        .writeStream.format("text")
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append")
+        .start(dir.resolve("sink").toString)
+      try {
+        // four 1-minute windows, one batch each: every batch's
+        // watermark closes the window before it, so windows 0–2 emit
+        for (m <- 0 until 4) {
+          input.addData(ev("p1", f"2025-01-01T00:$m%02d:10+00:00", 120 + m),
+            ev("p2", f"2025-01-01T00:$m%02d:20+00:00", 45))
+          q.processAllAvailable()
+        }
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
+      } finally q.stop()
+      rec.stop()
+      val jfr = dir.resolve("process-start.jfr")
+      rec.dump(jfr)
+      val commands = RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      val forks = commands.filter { c =>
+        Seq("chmod", "readlink", "ls", "stat").contains(c.split(' ').head.split('/').last)
+      }
+      assert(forks.size == 0, s"${forks.size} file-I/O process starts, e.g. ${forks.take(3)}")
+
+      val sink = spark.read.text(dir.resolve("sink").toString).as[String].collect()
+      assert(sink.length == 6, s"expected the 6 closed windows' alerts: ${sink.toSeq}")
+      val state = Files.walk(ckpt.resolve("state")).iterator().asScala.map(_.getFileName.toString).toSeq
+      val deltas = state.filter(_.endsWith(".delta"))
+      assert(deltas.nonEmpty, s"no state deltas in ${state.sorted}")
+      // Spark's checkpoint checksum (`n.delta.crc`) and the local file
+      // system's own (`.n.delta.crc`) are both still written
+      for (d <- deltas; crc <- Seq(s"$d.crc", s".$d.crc"))
+        assert(state.contains(crc), s"no $crc in ${state.sorted}")
+    } finally {
+      rec.close()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   test("sliding windows: one event lands in size/slide windows") {
