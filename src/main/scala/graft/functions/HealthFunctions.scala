@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,11 +31,10 @@ object HealthFunctions {
     * unparseable timestamp, non-positive rate) yields NULL, matching
     * the reference's None (tests/test_flink_logic.py:14-23).
     *
-    * Usage note (measured): alias the result ONCE (`.as("e")`) and
-    * filter on `e.isNotNull` — a multi-conjunct filter on the parsed
-    * fields gets predicate-pushed with one full copy of this tree
-    * per conjunct (Catalyst substitutes trees, not DAGs), which
-    * multiplied the JSON parse ~6× on the batch path.
+    * Usage note: to keep only the valid events of a frame, call
+    * [[validEvents]], not `select(parse.as("e")).filter(e.isNotNull)`:
+    * Catalyst pushes that filter below the projection, and the
+    * optimized plan then parses every row twice (see [[validEvents]]).
     */
   def parseEvent(raw: Column): Column = {
     val j = from_json(raw, eventSchema)
@@ -61,6 +60,26 @@ object HealthFunctions {
     */
   def parseEventFast(raw: Column): Column =
     coalesce(FastEventParse.fastParseEvent(raw), parseEvent(raw))
+
+  /** The valid events of `df`: the `keep` columns plus patient_id,
+    * heart_rate_bpm and event_time of every row whose `raw` payload
+    * parses ([[parseEventFast]]); rows that do not parse are dropped.
+    *
+    * The payload is parsed exactly ONCE per row. Filtering a parsed
+    * alias (`select(parse.as("e")).filter(e.isNotNull)`) does not do
+    * that: Catalyst pushes the filter below the projection by
+    * substituting the alias, so the optimized plan holds the whole
+    * parse tree twice — once in the Filter, once in the Project —
+    * and every row is parsed twice (a multi-conjunct filter on the
+    * parsed fields makes one copy per conjunct). Here the parse is
+    * the input of a generator, `explode(array(parse))`, and the null
+    * filter reads the generated column, which no rule can push below
+    * the Generate or substitute back into the parse.
+    */
+  def validEvents(df: DataFrame, raw: Column, keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(array(parseEventFast(raw))).as("e"): _*)
+      .filter(col("e").isNotNull)
+      .select(keep.map(col) :+ col("e.*"): _*)
 
   /** classify_window: avg heart rate → alert label. */
   def classifyWindow(avgHr: Column): Column =

@@ -38,27 +38,18 @@ object Health {
 
   private[graft] def hrParseOn(ev: DataFrame): DataFrame = {
     // Validity here is derivable from the base columns (the harness
-    // itself injects the corruption), so the filter is a cheap
-    // scan-level predicate and the JSON parse runs exactly once per
-    // surviving row: from_json aliased once, field extraction in the
-    // next projection (multi-ref aliases don't collapse). The general
-    // null-on-invalid path lives in parseEvent (streaming + tests) —
-    // filtering on the parsed struct would predicate-push a full copy
-    // of the parse tree per conjunct (measured 8× slower).
-    ev.filter(col("event_id") % 13 =!= 0 && floor(col("value")) > 0)
-      .withColumn("raw", rawPayload(("user_id", "ts", "value")))
-      .select(col("event_id"), parseEventFast(col("raw")).as("e"))
-      // Null-safety: a NULL ts/user_id survives the scan pre-filter but
-      // fails the JSON round-trip (field omitted → parse returns null);
-      // drop those rows here so both engines agree — the oracle mirrors
-      // this with ts/user_id IS NOT NULL, which is exactly the set of
-      // rows whose parse fails given the pre-filter above.
-      .filter(col("e").isNotNull)
-      .select(
-        col("event_id"),
-        col("e.patient_id").as("patient_id"),
-        col("e.heart_rate_bpm").as("heart_rate_bpm"),
-        col("e.event_time").as("event_time"))
+    // itself injects the corruption), so the scan-level predicate
+    // drops the corrupt rows before any payload is built. The payload
+    // is a column of its own, so it is built once per row rather than
+    // once per reference inside the parse. validEvents parses it
+    // exactly once per surviving row and drops the rows whose parse
+    // fails: a NULL ts/user_id survives the pre-filter but fails the
+    // JSON round-trip (field omitted → parse returns null). The oracle
+    // mirrors this with ts/user_id IS NOT NULL, which is exactly the
+    // set of rows whose parse fails given the pre-filter.
+    val payloads = ev.filter(col("event_id") % 13 =!= 0 && floor(col("value")) > 0)
+      .select(col("event_id"), rawPayload(("user_id", "ts", "value")).as("raw"))
+    validEvents(payloads, col("raw"), "event_id")
       .orderBy(col("event_id"))
   }
 

@@ -8,7 +8,9 @@ import graft.streaming._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,6 +133,57 @@ class StreamingSpec extends AnyFunSuite {
       rec.close()
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
+  }
+
+  /** Runs `batches` through `HealthMonitor.alerts` into an append
+    * memory sink, one micro-batch each; returns the data batches'
+    * progress and the last batch's optimized plan.
+    */
+  private def runAlerts(name: String, batches: Seq[Seq[String]])
+      : (Seq[StreamingQueryProgress], LogicalPlan) = {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[String]
+    val q = HealthMonitor.memorySink(HealthMonitor.alerts(input.toDF().toDF("value")), name, "append")
+    try {
+      for (b <- batches) { input.addData(b: _*); q.processAllAvailable() }
+      (q.recentProgress.toSeq.filter(_.numInputRows > 0),
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan)
+    } finally q.stop()
+  }
+
+  test("the alert stream parses each line once: one FastEventParse in its optimized plan") {
+    // the second batch leaves the watermark where it is, so no
+    // no-data batch follows it and the last execution read the source
+    val (_, plan) = runAlerts("alerts_once", Seq(Seq(ev("p1", "2025-01-01T00:00:10+00:00", 80)),
+      Seq(ev("p1", "2025-01-01T00:00:08+00:00", 82))))
+    assert(FastParseSpec.fastParses(plan) == 1, plan.treeString)
+  }
+
+  test("malformed lines never reach the watermark operator") {
+    // Spark's watermark operator records a null event time as 0, so a
+    // malformed line that got past the parse filter would show as a
+    // 1970 minimum in the batch's event-time stats
+    val valid = Seq(
+      Seq(ev("p1", "2025-01-01T00:00:10+00:00", 80), ev("p2", "2025-01-01T00:00:25+00:00", 90)),
+      Seq(ev("p1", "2025-01-01T00:02:00+00:00", 85)),
+      // 65 s behind the watermark: the one row it drops
+      Seq(ev("p1", "2025-01-01T00:00:50+00:00", 200), ev("p2", "2025-01-01T00:02:05+00:00", 95)))
+    val malformed = Seq("garbage-not-json", """{"patient_id":"p3"}""",
+      """{"patient_id":"p4","timestamp":"1970-01-01T00:00Z","heart_rate_bpm":70}""",
+      """{"patient_id":"p5","timestamp":"2025-01-01t00:00:00Z","heart_rate_bpm":70}""",
+      """{"patient_id":"p6","timestamp":"2025-01-01T00:00:05Z","heart_rate_bpm":0}""")
+    val (clean, _) = runAlerts("alerts_clean", valid)
+    val (planted, _) = runAlerts("alerts_planted", valid.map(_ ++ malformed))
+
+    def mins(ps: Seq[StreamingQueryProgress]) = ps.map(_.eventTime.get("min"))
+    assert(mins(planted) == Seq("2025-01-01T00:00:10.000Z", "2025-01-01T00:02:00.000Z",
+      "2025-01-01T00:00:50.000Z"))
+    assert(mins(planted) == mins(clean))
+    def dropped(ps: Seq[StreamingQueryProgress]) =
+      ps.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    assert(dropped(clean) == 1)
+    assert(dropped(planted) == dropped(clean))
   }
 
   test("sliding windows: one event lands in size/slide windows") {
