@@ -121,7 +121,9 @@ object Health {
     * runs of consecutive same-type abnormal windows per patient,
     * purely declarative (island id = difference of two row_numbers —
     * one shuffle, no state store). The streaming twin with real keyed
-    * state is [[graft.streaming.EpisodeTracker]].
+    * state is [[graft.streaming.EpisodeTracker]]; on a batch Dataset of
+    * the same windows it emits the runs still open at the end of input
+    * too, so the two report the same episodes.
     */
   def hrEpisodes(spark: SparkSession, dir: String): DataFrame =
     hrEpisodesOn(Tables(spark, dir).events)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One finalized window-level alert (input to episode tracking). */
@@ -36,20 +36,34 @@ final case class OpenEpisode(
   * design points at (README "per-key (per-patient) state"):
   * consecutive abnormal windows of the same type merge into an
   * episode; the episode is emitted when the run breaks (normal
-  * window / type change) or the state times out.
+  * window / type change) or its patient goes quiet.
   *
-  * `flatMapGroupsWithState` keeps state per patient in the state
-  * store — scales horizontally with the number of keys, survives
-  * restarts via checkpointing.
+  * `flatMapGroupsWithState` keeps state per patient in the default
+  * state store — scales horizontally with the number of keys,
+  * survives restarts via checkpointing. The contract:
+  *
+  *  - streaming input must carry a watermark (an event-time column
+  *    such as `window_time` of [[HealthMonitor.alerts]], or a
+  *    `withWatermark` column); Spark refuses the event-time timeout
+  *    without one;
+  *  - a still-open episode is emitted once the watermark passes its
+  *    `end` + [[FlushGapMs]] (event-time timeout — no wall clock, so
+  *    bounded drains quiesce); if the watermark has already passed
+  *    that point when the window arrives, it is emitted at once;
+  *  - batch input holds all of its data, so runs still open at the
+  *    end of input are emitted.
   */
 object EpisodeTracker {
 
-  /** The run fold both trackers share: window alerts, in window
-    * order, extend the open run while the type repeats; a type change
-    * or a normal window closes it. Returns the closed episodes and the
-    * run still open afterwards.
+  /** Quiet gap after which an open episode is flushed. */
+  val FlushGapMs: Long = 10 * 60 * 1000L
+
+  /** The run fold: window alerts, in window order, extend the open
+    * run while the type repeats; a type change or a normal window
+    * closes it. Returns the closed episodes and the run still open
+    * afterwards.
     */
-  private[streaming] def foldRuns(patientId: String, open: Option[OpenEpisode],
+  private def foldRuns(patientId: String, open: Option[OpenEpisode],
       rows: Iterator[WindowAlert]): (Seq[Episode], Option[OpenEpisode]) = {
     var cur = open
     val out = Seq.newBuilder[Episode]
@@ -73,45 +87,32 @@ object EpisodeTracker {
     (out.result(), cur)
   }
 
-  def trackEpisodes(useTimeout: Boolean)(patientId: String, rows: Iterator[WindowAlert],
-      state: GroupState[OpenEpisode]): Iterator[Episode] = {
+  private def trackEpisodes(streaming: Boolean)(patientId: String,
+      rows: Iterator[WindowAlert], state: GroupState[OpenEpisode]): Iterator[Episode] = {
     val (closed, open) = foldRuns(patientId, state.getOption, rows)
-    if (state.hasTimedOut) {
-      state.remove()
-      (closed ++ open.map(_.closed(patientId))).iterator
-    } else {
-      open match {
-        case Some(ep) =>
-          state.update(ep)
-          if (useTimeout) state.setTimeoutDuration("10 minutes")
-        case None => state.removeIfExists()
-      }
-      closed.iterator
+    def flushAt(ep: OpenEpisode) = ep.end.getTime + FlushGapMs
+    open match {
+      // setTimeoutTimestamp rejects a time below the watermark, so a
+      // run whose flush point has passed (a timed-out one included)
+      // takes the emitting branch
+      case Some(ep) if streaming && flushAt(ep) >= state.getCurrentWatermarkMs() =>
+        state.update(ep)
+        state.setTimeoutTimestamp(flushAt(ep))
+        closed.iterator
+      case _ =>
+        if (state.exists) state.remove()
+        (closed ++ open.map(_.closed(patientId))).iterator
     }
   }
 
-  /** Wire the tracker over a stream (or batch Dataset in tests) of
-    * window alerts.
-    *
-    * `flushOpenEpisodes=true` adds a 10-minute processing-time
-    * timeout that force-emits still-open episodes for quiet patients
-    * (production setting; it keeps the trigger loop alive, so
-    * AvailableNow/processAllAvailable-style drains never quiesce —
-    * leave it off for bounded runs).
+  /** Wire the tracker over a stream (or a batch Dataset) of window
+    * alerts; see the object scaladoc for the watermark contract.
     */
-  def episodes(alerts: Dataset[WindowAlert],
-      flushOpenEpisodes: Boolean = false): Dataset[Episode] = {
+  def episodes(alerts: Dataset[WindowAlert]): Dataset[Episode] = {
     import alerts.sparkSession.implicits._
-    val timeout =
-      if (flushOpenEpisodes) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     alerts
       .groupByKey(_.patient_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        trackEpisodes(flushOpenEpisodes))
-  }
-
-  implicit private class StateOps(private val s: GroupState[OpenEpisode]) extends AnyVal {
-    def removeIfExists(): Unit = if (s.exists) s.remove()
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        trackEpisodes(alerts.isStreaming))
   }
 }

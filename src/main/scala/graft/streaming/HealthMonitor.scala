@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.HealthFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -77,21 +77,8 @@ object HealthMonitor {
       watermark: String = DefaultWatermark,
       windowSize: String = DefaultWindow,
       slide: Option[String] = None): DataFrame =
-    readings(raw, watermark)
-      .groupBy(col("patient_id"),
-        slide.fold(window(col("event_ts"), windowSize))(s =>
-          window(col("event_ts"), windowSize, s)).as("w"))
-      .agg(
-        avg(col("hr")).as("avg_hr"),
-        min(col("hr")).as("min_hr"),
-        max(col("hr")).as("max_hr"),
-        count(lit(1)).as("n_readings"))
-      .select(
-        col("patient_id"),
-        col("w.start").as("window_start"),
-        col("w.end").as("window_end"),
-        col("avg_hr"), col("min_hr"), col("max_hr"), col("n_readings"),
-        classifyWindow(col("avg_hr")).as("alert_type"))
+    windowStats(raw, watermark, slide.fold(window(col("event_ts"), windowSize))(s =>
+      window(col("event_ts"), windowSize, s)))
 
   /** Session-window variant: per-patient activity sessions closed by
     * `gap` of silence (Spark's native session_window state merging —
@@ -102,8 +89,17 @@ object HealthMonitor {
       raw: DataFrame,
       watermark: String = DefaultWatermark,
       gap: String = "5 minutes"): DataFrame =
+    windowStats(raw, watermark, session_window(col("event_ts"), gap))
+
+  /** Per-patient stats and class of each `w` window over the readings.
+    * `window_time` is the window's event time (end − 1 µs) and keeps
+    * the watermark tag that `w.start` drops, so a stateful operator
+    * chained after the aggregate — [[EpisodeTracker]]'s event-time
+    * timeout — can run in the same query.
+    */
+  private def windowStats(raw: DataFrame, watermark: String, w: Column): DataFrame =
     readings(raw, watermark)
-      .groupBy(col("patient_id"), session_window(col("event_ts"), gap).as("w"))
+      .groupBy(col("patient_id"), w.as("w"))
       .agg(
         avg(col("hr")).as("avg_hr"),
         min(col("hr")).as("min_hr"),
@@ -114,7 +110,8 @@ object HealthMonitor {
         col("w.start").as("window_start"),
         col("w.end").as("window_end"),
         col("avg_hr"), col("min_hr"), col("max_hr"), col("n_readings"),
-        classifyWindow(col("avg_hr")).as("alert_type"))
+        classifyWindow(col("avg_hr")).as("alert_type"),
+        window_time(col("w")).as("window_time"))
 
   /** Alert rows → the reference's JSON alert payload
     * (flink_job.py:113-122).

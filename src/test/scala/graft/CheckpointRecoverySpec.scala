@@ -135,7 +135,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
       val eps = EpisodeTracker.episodes(
         graft.streaming.HealthMonitor.alerts(streamIn)
           .select(col("patient_id"), col("window_start"), col("window_end"),
-            col("avg_hr"), col("alert_type")).as[WindowAlert])
+            col("avg_hr"), col("alert_type"), col("window_time")).as[WindowAlert])
       val q = eps.writeStream
         .format("parquet").option("path", outDir)
         .option("checkpointLocation", ckpt)

@@ -830,7 +830,7 @@ class QueryPackSpec extends AnyFunSuite {
     assert(fromJson == stats)
   }
 
-  test("hr_episodes matches the streaming EpisodeTracker on closed runs") {
+  test("hr_episodes equals the batch EpisodeTracker's episodes") {
     import spark.implicits._
     import graft.streaming._
     val batch = SparkEntry.queries("hr_episodes")(spark, sf).collect()
@@ -842,17 +842,17 @@ class QueryPackSpec extends AnyFunSuite {
         col("avg_hr"), col("alert_type"))
       .as[WindowAlert]
     val streamed = EpisodeTracker.episodes(alerts).collect()
-    // streaming emits only runs closed by a following window; batch
-    // (gaps-and-islands) also reports runs still open at data end —
-    // so streamed episodes must be a subset with identical bounds
+    // a batch Dataset holds all of its input, so the tracker emits the
+    // runs still open at its end, as gaps-and-islands does: the two
+    // must report the same episodes with identical bounds and peaks
     val batchKeys = batch.map(r => (s"u${r.getAs[Long]("user_id")}",
       r.getAs[Long]("episode_start_ms"), r.getAs[Long]("episode_end_ms"),
-      r.getAs[Long]("n_windows"))).toSet
+      r.getAs[Long]("n_windows"), r.getAs[Double]("peak_avg_hr"))).toSet
     val streamKeys = streamed.map(e => (e.patient_id, e.start.getTime, e.end.getTime,
-      e.n_windows.toLong)).toSet
+      e.n_windows.toLong, e.peak_avg_hr)).toSet
     assert(streamKeys.nonEmpty)
-    assert(streamKeys.subsetOf(batchKeys),
-      s"streaming episodes not found in batch: ${streamKeys -- batchKeys}")
+    assert(streamed.length == batch.length && streamKeys == batchKeys,
+      s"tracker-only: ${streamKeys -- batchKeys}; batch-only: ${batchKeys -- streamKeys}")
   }
 
   test("custom TopKPerKey operator: same rows as the window formulation, no sort in plan") {

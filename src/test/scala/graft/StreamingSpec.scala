@@ -253,15 +253,18 @@ class StreamingSpec extends AnyFunSuite {
       WindowAlert("p1", ts("2025-01-01 00:01:00"), ts("2025-01-01 00:02:00"), 140, "tachycardia"),
       WindowAlert("p1", ts("2025-01-01 00:02:00"), ts("2025-01-01 00:03:00"), 80, "normal"),
       WindowAlert("p2", ts("2025-01-01 00:00:00"), ts("2025-01-01 00:01:00"), 40, "bradycardia"))
-    // AvailableNow: with ProcessingTimeTimeout in the state machine, a
-    // default-trigger query never quiesces for processAllAvailable.
-    val q = EpisodeTracker.episodes(input.toDS()).writeStream
+    // AvailableNow: a bounded drain. The tracker's timeout runs off
+    // event time, so the query finishes once the input is consumed.
+    val q = EpisodeTracker.episodes(
+        input.toDS().withWatermark("window_start", "0 seconds").as[WindowAlert])
+      .writeStream
       .format("memory").queryName("episodes_t").outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try {
       assert(q.awaitTermination(120000), "query did not finish")
       val eps = spark.table("episodes_t").as[Episode].collect()
-      // p1's run closed by the normal window; p2's episode still open (no emission)
+      // p1's run closed by the normal window; p2's episode still open:
+      // the watermark (00:02) is short of its flush point (00:11)
       assert(eps.length == 1)
       val e = eps.head
       assert(e.patient_id == "p1" && e.episode_type == "tachycardia")
