@@ -24,16 +24,11 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     def runOnce(name: String, dir: String): Double = {
-      // isolate every pass: drop memoized artifacts (pair sets, LM
-      // scores, tokenizer models), CacheManager entries AND any
-      // leaked persisted blocks from the previous query. Two reasons:
-      // (1) every reported number is COLD operator cost — r9's
-      // dedup_eval 0.15 s was a warm-artifact time masquerading as
-      // operator scaling (flagged by the round-9 advisor); (2) one
-      // query's retained storage can no longer bleed into the next
+      // isolate every pass: drop CacheManager entries AND any leaked
+      // persisted blocks from the previous query, so one query's
+      // retained storage can no longer bleed into the next
       // measurement (the r9 pagerank ×1.7 driver regression with runs
-      // growing 10.0 → 14.9 s inside one JVM). Warm-path evidence
-      // lives where warmth is the contract: the artifact-cache specs.
+      // growing 10.0 → 14.9 s inside one JVM).
       CacheLedger.drain(spark)
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, dir)
@@ -170,9 +165,9 @@ object Bench {
       val up = slurp("/proc/uptime").split(" ").headOption.getOrElse("")
       s""","box":{"loadavg_end":"$load","uptime_s":"$up","cpus":"$cpus"}"""
     }
-    // cold_artifacts: every pass runs behind a CacheLedger drain, so
-    // per-query times are cold operator cost (no warm memoized pair
-    // sets / models / scores — the r9 advisory)
+    // cold_artifacts: no operator memoizes across queries, so every
+    // per-query time is cold operator cost by construction (the
+    // field stays for the readers of this line)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","cold_artifacts":true,"queries":$qs,"medians":$mediansJson,"median_total":$medianTotal,"runs":$runsJson,"sf":"$sfDir"$slopeJson$boxJson}"""
     // persist to a file first: log capture truncates long lines (r02's
     // tail lost the front half of the per-query map), the file never

@@ -1,186 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** The engine's ARTIFACT-CACHE LEDGER — the single registry of every
-  * in-JVM memoized artifact, with one retention contract and one
-  * drain hook. The library memoizes a handful of expensive,
-  * deterministic-per-corpus artifacts (tokenizer models, LM scores,
-  * near-dup pair sets, cluster labels) so that a long-lived session
-  * pays candidate generation / training ONCE per corpus; this object
-  * is where a harness — or an operator reviewer — sees them all at a
-  * glance instead of hunting ConcurrentHashMaps across files.
-  *
-  * Retention contract (uniform across entries):
-  *  - Keys include the corpus dir AND its metadata fingerprint
-  *    ([[operators.Tokenizer.corpusFingerprint]] — file names, mtimes,
-  *    sizes, count), so a corpus regenerated under the same path can
-  *    never serve a stale artifact (the caveat: a same-mtime-
-  *    granularity rewrite reproducing every name and size is
-  *    invisible; harnesses that do that call [[clearAll]]).
-  *  - Values are either driver-side model objects (bounded Seqs — no
-  *    executor storage at all) or [[Materialize.eager]] DataFrames
-  *    whose blocks live OUTSIDE the session CacheManager
-  *    (CacheHygieneSpec's invariant); an evicted or cleared frame is
-  *    unpersisted immediately, never left to the async ContextCleaner.
-  *  - A full clear ([[clearAll]] / [[drain]]) bounds a many-query
-  *    run's retained storage at exactly the artifacts of the LAST
-  *    query — CacheLedgerSpec asserts the drain leaves zero persisted
-  *    RDDs in the context.
-  *
-  * [[operators.Tokenizer.clearModelCaches]] — the hook harness docs
-  * have pointed at since the caches existed — delegates here, so
-  * "clear the models" now clears every registered family.
+/** The harness drain. No artifact outlives the query that built it:
+  * every operator derives its intermediates inside the call and
+  * releases them, or leaves them to the ContextCleaner, so a
+  * many-query run has nothing to warm. [[drain]] is the reset a
+  * harness runs between queries (Bench, Verify, perfbench's
+  * BatchPass and LpaSkewBench do).
   */
 object CacheLedger {
 
-  /** One registered cache: a clear hook plus introspection for specs
-    * and the README table.
-    */
-  final case class Entry(name: String, holds: String,
-      clear: () => Unit, retained: () => Int)
-
-  private val entries =
-    new java.util.concurrent.CopyOnWriteArrayList[Entry]()
-
-  /** Register a cache (called from the owning object's initializer —
-    * an unregistered cache is a CacheLedgerSpec failure, not a
-    * runtime hazard).
-    */
-  def register(name: String, holds: String)(clear: () => Unit)(
-      retained: () => Int): Unit =
-    entries.add(Entry(name, holds, clear, retained))
-
-  /** Snapshot of the registered caches (objects register on first
-    * touch — [[touchAll]] forces the full list).
-    */
-  def all: Seq[Entry] = {
-    val b = Seq.newBuilder[Entry]
-    entries.forEach(e => b += e)
-    b.result()
-  }
-
-  /** Force-initialize every cache-owning object so [[all]] is the
-    * complete ledger (Scala objects register lazily on first use).
-    */
-  def touchAll(): Unit = {
-    val _ = (operators.Tokenizer, operators.Dedup, operators.LangModel,
-      operators.Graph)
-  }
-
-  /** Clear every registered cache, unpersisting any frames they held. */
-  def clearAll(): Unit = entries.forEach(e => e.clear())
-
-  /** Total artifacts currently retained across the ledger. */
-  def retainedTotal: Int = all.map(_.retained()).sum
-
-  /** Harness drain (Bench calls this between timed passes): clear the
-    * artifact caches, drop any CacheManager entries, then sweep
-    * whatever persisted RDDs remain in the context — lazily-
-    * checkpointed loop intermediates whose owners released them only
-    * to the async ContextCleaner become free NOW, so one query's
-    * storage pressure can never leak into the next measurement (the
-    * r9 pagerank lesson: retained blocks compounded across a
-    * 168-query bench into runs that GREW 10.0 → 14.9 s in one JVM).
-    * Safe exactly because [[clearAll]] ran first: after it, no live
-    * artifact references a swept block.
+  /** Drop any CacheManager entries, then sweep whatever persisted
+    * RDDs remain in the context — lazily-checkpointed loop
+    * intermediates whose owners released them only to the async
+    * ContextCleaner become free NOW, so one query's storage pressure
+    * can never leak into the next (the r9 pagerank lesson: retained
+    * blocks compounded across a 168-query bench into runs that GREW
+    * 10.0 → 14.9 s in one JVM). `spark.catalog.clearCache()` alone
+    * does not free `localCheckpoint` blocks. Safe between queries:
+    * no frame outlives its query, so no live consumer reads a swept
+    * block (CacheLedgerSpec asserts the drain leaves zero persisted
+    * RDDs).
     */
   def drain(spark: SparkSession): Unit = {
-    clearAll()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
-}
-
-/** A session-scoped memo for deterministic per-corpus DataFrame
-  * artifacts — the one implementation behind the ledger's
-  * frame-holding entries (Dedup pair sets, cluster labels, LM
-  * scores). Enforces the contract uniformly:
-  *
-  *  - lookups key on (sub-key, corpus dir, corpus FINGERPRINT) — a
-  *    regenerated corpus misses and recomputes, and the stale frame
-  *    is unpersisted on eviction;
-  *  - a frame from a stopped session is detected by session identity
-  *    and rebuilt;
-  *  - the compute (a multi-second Spark job) runs OUTSIDE the map
-  *    lock — only the cheap install/validity check holds a bin lock,
-  *    so unrelated keys hashing to the same bin never serialize
-  *    behind a candidate-generation pipeline;
-  *  - a lost same-key race unpersists the LOSER's frame (it has no
-  *    consumers yet) and returns the winner, so concurrent callers
-  *    converge on one retained copy.
-  */
-final class ArtifactCache(val name: String, val holds: String) {
-
-  private val map = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Long, DataFrame)]()
-
-  CacheLedger.register(name, holds)(() => clear())(() => map.size)
-
-  /** Look up (or compute and install) the artifact for `(sub, dir)`
-    * at the corpus's CURRENT fingerprint. `compute` must return an
-    * already-materialized frame ([[Materialize.eager]] product).
-    */
-  def getOrCompute(spark: SparkSession, dir: String, sub: String = "")(
-      compute: => DataFrame): DataFrame = {
-    val fp = operators.Tokenizer.corpusFingerprint(spark, dir)
-    val key = (sub, dir)
-    val hit = map.get(key)
-    if (hit != null && hit._1 == fp && (hit._2.sparkSession eq spark))
-      return hit._2
-    val fresh = compute // outside any map lock
-    var evicted: DataFrame = null
-    val winner = map.compute(key, (_, old) =>
-      if (old != null && old._1 == fp && (old._2.sparkSession eq spark)) old
-      else {
-        if (old != null) evicted = old._2
-        (fp, fresh)
-      })._2
-    if (evicted != null) safeUnpersist(evicted)
-    if (!(winner eq fresh)) safeUnpersist(fresh)
-    winner
-  }
-
-  /** Unconditionally install `fresh` for `(sub, dir)` at the corpus's
-    * current fingerprint (the lm_score "this query IS the training
-    * cost" convention: the producing operator refreshes, consumers
-    * look up). The evicted frame is unpersisted — consumers must
-    * re-fetch through [[getOrCompute]] per use, never retain frames
-    * across refreshes.
-    */
-  def refresh(spark: SparkSession, dir: String, sub: String = "")(
-      fresh: DataFrame): DataFrame = {
-    val fp = operators.Tokenizer.corpusFingerprint(spark, dir)
-    val old = map.put((sub, dir), (fp, fresh))
-    if (old != null && !(old._2 eq fresh)) safeUnpersist(old._2)
-    fresh
-  }
-
-  def retained: Int = map.size
-
-  /** Drop every entry, unpersisting the frames (stopped-session
-    * frames no-op via the guard).
-    */
-  def clear(): Unit = {
-    map.values.forEach(v => safeUnpersist(v._2))
-    map.clear()
-  }
-
-  /** Free an evicted/cleared frame's storage NOW via
-    * [[Materialize.release]] (the r10 advisory: Dataset.unpersist is
-    * a no-op for checkpoint-strategy frames, so the ledger's
-    * "unpersisted immediately, never left to the async
-    * ContextCleaner" contract held only through drain()'s
-    * getPersistentRDDs sweep). Safe because the [[getOrCompute]] /
-    * [[refresh]] contract already requires artifact frames to be
-    * materialized ROOTS (a [[Materialize.eager]] product) and forbids
-    * consumers retaining them across refreshes; release is root-only
-    * by design, so even a mis-shaped derived frame could never
-    * truncate a shared artifact underneath it. Stopped-session frames
-    * no-op via the catch.
-    */
-  private def safeUnpersist(df: DataFrame): Unit =
-    try Materialize.release(df)
-    catch { case scala.util.control.NonFatal(_) => () }
 }

@@ -31,8 +31,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // cached intermediates here are always repartition(key)-then-
-      // cache by design (pagerank edges, propagation edges, inverted-
-      // index tf): keep their output partitioning deterministic so
+      // cache by design (pagerank edges, inverted-index tf): keep their output partitioning deterministic so
       // downstream stages consume the cache WITHOUT re-shuffling.
       // With the default (true), AQE plans the cache build and
       // InMemoryTableScan reports unknown partitioning at planning

@@ -174,35 +174,14 @@ object Materialize {
     * analyzed plan IS a checkpoint root (the shape every
     * [[eager]]/localCheckpoint product has). It deliberately does NOT
     * sweep LogicalRDDs buried deeper in a derived plan: a lazy frame
-    * built over a shared memoized artifact (an [[graft.ArtifactCache]]
-    * entry, say) must never truncate that artifact's blocks out from
-    * under its other consumers — later reads would be job failures,
-    * not recomputes. A loop that stacked checkpoints into one plan
-    * and wants them all freed says so explicitly with [[releaseTree]].
+    * built over another materialized frame must never truncate that
+    * frame's blocks out from under its other consumers — later reads
+    * would be job failures, not recomputes.
     */
   def release(df: DataFrame): Unit = {
     try df.unpersist()
     catch { case scala.util.control.NonFatal(_) => () }
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
-
-  /** [[release]]'s DEEP form: additionally unpersists EVERY
-    * LogicalRDD in the analyzed subtree. For frames that deliberately
-    * compose dead checkpoints into one plan — the propagation loop's
-    * mirrored edge list caches a union over a dead materialized pair
-    * frame, and releasing only the cache would leak the pair blocks
-    * to the async ContextCleaner. Callers must own every checkpoint
-    * in the subtree: sweeping a plan that references a SHARED
-    * artifact frame kills that artifact for everyone else.
-    */
-  def releaseTree(df: DataFrame): Unit = {
-    try df.unpersist()
-    catch { case scala.util.control.NonFatal(_) => () }
-    df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()

@@ -31,9 +31,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    returning, so downstream composition plans under the caller's
   *    own conf (a returned frame must never smuggle loop conf out).
   *
-  * Storage is context-level, so [[Materialize.release]] /
-  * [[Materialize.releaseTree]] on a rebound frame free the same
-  * blocks they always did.
+  * Storage is context-level, so [[Materialize.release]] on a
+  * rebound frame frees the same blocks it always did.
   */
 object PlanScope {
 

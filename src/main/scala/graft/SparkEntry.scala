@@ -1547,7 +1547,7 @@ object SparkEntry {
     },
 
     // transitive closure of the near-dup pair graph (recursive CTE);
-    // the engine runs distributed min-label propagation instead
+    // the engine runs distributed star contraction instead
     "dedup_clusters" ->
       s"""WITH RECURSIVE $ngramCtes,
         |p2 AS (SELECT d1, d2 FROM j WHERE jaccard >= 0.5),

@@ -1,8 +1,10 @@
 package graft
 
+import graft.Materialize.MatOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming-path scale benchmark: drives the two production
   * streaming topologies (HealthMonitor alerts over raw JSON events,
@@ -22,9 +24,10 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Output: ONE JSON line, also written to target/stream_bench.json:
   * `{"metric":"stream_total","value":S,"unit":"sec","paths":{...}}`
-  * with per-path rows, seconds, rows/sec at each SF and the slope
+  * with per-path rows, seconds, rows/sec at each SF, the slope
   * t_big/t_small (data grows 10×; slope ≫ 10 = superlinear state or
-  * shuffle growth).
+  * shuffle growth) and the rows the watermark dropped in the first
+  * big-SF pass.
   */
 object StreamBench {
 
@@ -38,12 +41,17 @@ object StreamBench {
 
   /** Health ingest fixture: the events table rendered as the Kafka
     * value payload (same expression hr_parse round-trips, including
-    * the every-13th corrupt row the parser must drop).
+    * the every-13th corrupt row the parser must drop), cut into
+    * [[InFiles]] event-time chunks (`chunk` 1..InFiles in `ts`
+    * order) — the arrival order of a real feed, so the watermark
+    * drops only rows that are late in the data itself.
     */
   private def healthInput(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).events
       .withColumn("value", operators.Health.rawPayload(("user_id", "ts", "value")))
-      .select("value")
+      .withColumn("chunk",
+        ntile(InFiles).over(Window.orderBy(col("ts"), col("event_id"))))
+      .select("chunk", "value")
 
   /** Curation ingest fixture: documents timestamped like the
     * CurationStreamSpec fixture (monotone in doc_id, one watermark
@@ -56,10 +64,11 @@ object StreamBench {
         expr("timestamp_micros(CAST(1700000000000000 + doc_id * 1000 AS BIGINT))"))
 
   /** Run one topology AvailableNow over a pre-written input dir;
-    * returns wall seconds for the whole query (all micro-batches).
+    * returns wall seconds for the whole query (all micro-batches) and
+    * the rows its watermark dropped.
     */
   private def runStream(build: DataFrame => DataFrame, streamIn: DataFrame,
-      outDir: String, ckpt: String): Double = {
+      outDir: String, ckpt: String): (Double, Long) = {
     rm(new java.io.File(outDir)); rm(new java.io.File(ckpt))
     val t0 = System.nanoTime()
     val q = build(streamIn).writeStream
@@ -70,10 +79,17 @@ object StreamBench {
       .trigger(Trigger.AvailableNow())
       .start()
     if (!q.awaitTermination(600000)) sys.error("stream did not finish in 600s")
-    (System.nanoTime() - t0) / 1e9
+    ((System.nanoTime() - t0) / 1e9, droppedByWatermark(q))
   }
 
-  private final case class PathResult(rows: Long, sec: Double) {
+  /** Σ numRowsDroppedByWatermark over the query's stateful operators
+    * and micro-batches.
+    */
+  private def droppedByWatermark(q: StreamingQuery): Long =
+    q.recentProgress.iterator.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
+
+  private final case class PathResult(rows: Long, sec: Double, dropped: Long) {
     def rps: Long = if (sec > 0) (rows / sec).toLong else 0L
   }
 
@@ -82,12 +98,18 @@ object StreamBench {
       base: String): Map[String, PathResult] = {
     // health: text payload files → alerts
     val hIn = s"$base/h_in"
-    val health = healthInput(spark, sfDir)
-    health.repartition(InFiles).write.mode("overwrite").text(hIn)
+    // one write per chunk, in event-time order, so file mtimes (the
+    // file source's arrival order) follow event time
+    val health = healthInput(spark, sfDir).materialized
+    (1 to InFiles).foreach { c =>
+      health.filter(col("chunk") === c).select("value").coalesce(1)
+        .write.mode(if (c == 1) "overwrite" else "append").text(hIn)
+    }
+    Materialize.release(health)
     val hRows = spark.read.text(hIn).count()
     val hStream = spark.readStream.schema("value STRING")
       .option("maxFilesPerTrigger", FilesPerTrigger).text(hIn)
-    val hSec = runStream(streaming.HealthMonitor.alerts(_), hStream,
+    val (hSec, hDrop) = runStream(streaming.HealthMonitor.alerts(_), hStream,
       s"$base/h_out", s"$base/h_ckpt")
 
     // curation: parquet doc files → admitted set
@@ -97,7 +119,7 @@ object StreamBench {
     val cRows = spark.read.parquet(cIn).count()
     val cStream = spark.readStream.schema(curation.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(cIn)
-    val cSec = runStream(streaming.CurationStream.curate(_), cStream,
+    val (cSec, cDrop) = runStream(streaming.CurationStream.curate(_), cStream,
       s"$base/c_out", s"$base/c_ckpt")
 
     // gated curation: same ingest through the batch-trained ccnet
@@ -108,7 +130,7 @@ object StreamBench {
       Tables(spark, sfDir).documents.select(col("doc_id"), col("text"), col("lang")))
     val gStream = spark.readStream.schema(curation.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(cIn)
-    val gSec = runStream(streaming.CurationStream.curateGated(_, gate), gStream,
+    val (gSec, gDrop) = runStream(streaming.CurationStream.curateGated(_, gate), gStream,
       s"$base/g_out", s"$base/g_ckpt")
 
     // strict curation: the same ingest through the Gopher rule gate
@@ -116,7 +138,7 @@ object StreamBench {
     // the per-doc lambda cost of the rules
     val sStream = spark.readStream.schema(curation.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(cIn)
-    val sSec = runStream(streaming.CurationStream.curateStrict(_), sStream,
+    val (sSec, sDrop) = runStream(streaming.CurationStream.curateStrict(_), sStream,
       s"$base/s_out", s"$base/s_ckpt")
 
     // near-dup gate: band-keyed SimHash state + windowed per-doc OR
@@ -124,7 +146,7 @@ object StreamBench {
     // monotone timestamps keep every bucket live
     val nStream = spark.readStream.schema(curation.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(cIn)
-    val nSec = runStream(
+    val (nSec, nDrop) = runStream(
       df => streaming.NearDupStream.nearDupFlags(
         df.select(col("doc_id"), col("text"), col("event_ts"))),
       nStream, s"$base/n_out", s"$base/n_ckpt")
@@ -136,7 +158,7 @@ object StreamBench {
       Tables(spark, sfDir).documents.select(col("doc_id"), col("text"), col("lang")))
     val dStream = spark.readStream.schema(curation.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(cIn)
-    val dSec = runStream(
+    val (dSec, dDrop) = runStream(
       df => streaming.DriftStream.driftCard(
         df.select(col("text"), col("lang"), col("event_ts")), driftBase),
       dStream, s"$base/d_out", s"$base/d_ckpt")
@@ -158,7 +180,7 @@ object StreamBench {
     val rRows = spark.read.parquet(rIn).count()
     val rStream = spark.readStream.schema(inserts.schema)
       .option("maxFilesPerTrigger", FilesPerTrigger).parquet(rIn)
-    val rSec = {
+    val (rSec, rDrop) = {
       val ckpt = s"$base/r_ckpt"
       rm(new java.io.File(ckpt))
       val qn = "sb_retract_" + java.lang.Integer.toHexString(base.hashCode)
@@ -170,16 +192,16 @@ object StreamBench {
         .trigger(Trigger.AvailableNow())
         .start()
       if (!q.awaitTermination(600000)) sys.error("retract stream did not finish in 600s")
-      (System.nanoTime() - t0) / 1e9
+      ((System.nanoTime() - t0) / 1e9, droppedByWatermark(q))
     }
 
-    Map("health_alerts" -> PathResult(hRows, hSec),
-      "curation" -> PathResult(cRows, cSec),
-      "curation_gated" -> PathResult(cRows, gSec),
-      "curation_strict" -> PathResult(cRows, sSec),
-      "neardup" -> PathResult(cRows, nSec),
-      "drift" -> PathResult(cRows, dSec),
-      "retract_view" -> PathResult(rRows, rSec))
+    Map("health_alerts" -> PathResult(hRows, hSec, hDrop),
+      "curation" -> PathResult(cRows, cSec, cDrop),
+      "curation_gated" -> PathResult(cRows, gSec, gDrop),
+      "curation_strict" -> PathResult(cRows, sSec, sDrop),
+      "neardup" -> PathResult(cRows, nSec, nDrop),
+      "drift" -> PathResult(cRows, dSec, dDrop),
+      "retract_view" -> PathResult(rRows, rSec, rDrop))
   }
 
   def main(args: Array[String]): Unit = {
@@ -226,6 +248,7 @@ object StreamBench {
         s""""rows_small":$rowsS,"sec_small":${fmt(sSec)},"rps_small":$rpsS,""" +
         s""""rows_big":$rowsB,"sec_big":${fmt(bSec)},"rps_big":$rpsB,""" +
         s""""runs_big":${bSecs.map(fmt).mkString("[", ",", "]")},""" +
+        s""""dropped_big":${bigRuns.head(k).dropped},""" +
         s""""slope":${fmt(slope)}}"""
     }.mkString("{", ",", "}")
     // headline = sum of per-path big medians; run totals ride along so

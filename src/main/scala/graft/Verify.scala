@@ -17,9 +17,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      // queries cache working sets (shingles etc.); don't let them
-      // pin storage memory across the whole 30+-query run
-      spark.catalog.clearCache()
+      // drop the previous query's cached and checkpointed blocks
+      // (clearCache alone leaves localCheckpoint blocks to the async
+      // ContextCleaner, so dead blocks pile up across the run)
+      CacheLedger.drain(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -985,8 +985,8 @@ object Curation {
     * cut against its near-duplicate structure — a val doc whose
     * near-copy sits in train inflates eval exactly like benchmark
     * leakage): every ngram_jaccard near-dup pair (τ = 0.5, the
-    * registered operator — same code, same constants, artifact-cached
-    * like dedup_eval's) lands in a (split_a ≤ split_b) cell with its
+    * registered operator's pair core — same code, same constants)
+    * lands in a (split_a ≤ split_b) cell with its
     * exact-duplicate sub-count (md5 text equality), zero-filled over
     * all six cells. The off-diagonal cells ARE the leakage; the fix
     * is content-keyed splitting, which this card motivates and
@@ -1002,8 +1002,6 @@ object Curation {
     import spark.implicits._
     val docs = Tables(spark, dir).documents
     val md5s = docs.select(col("doc_id"), md5(col("text")).as("tkey"))
-    // the shared fingerprint-keyed pair artifact (one candidate
-    // pipeline per corpus per session, however many cards consume it)
     val pairs = Dedup.ngramJaccardPairs(spark, dir)
     val celled = pairs
       .join(md5s.select(col("doc_id").as("d1"), col("tkey").as("k1")), "d1")

@@ -241,18 +241,13 @@ object Dedup {
     * (doc i ≈ doc i+1, component diameter = n — the one adversarial
     * shape one-hop methods cannot survive) converges in ~log₂ n
     * rounds (asserted on a 1000-link chain in DedupAnnSpec, with the
-    * round plan itself guarded). `star = false` falls back to
-    * iterative min-label propagation — one cheaper join per round but
-    * rounds = component diameter — kept as the comparison twin the
-    * equivalence spec runs both ways. Either way data stays
-    * distributed (joins on the edge list); the driver only sees a
-    * per-round convergence scalar, and `maxIters` is a loud stall
-    * guard, never a silent truncation. Oracle: transitive closure via
-    * DuckDB recursive CTE.
+    * round plan itself guarded). Data stays distributed (joins on
+    * the edge list); the driver only sees a per-round convergence
+    * scalar, and `maxIters` is a loud stall guard, never a silent
+    * truncation. Oracle: transitive closure via DuckDB recursive CTE.
     */
-  def clusters(spark: SparkSession, dir: String, maxIters: Int = 20,
-      star: Boolean = true): DataFrame =
-    clustersDocs(Tables(spark, dir).documents, maxIters, star)
+  def clusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame =
+    clustersDocs(Tables(spark, dir).documents, maxIters).orderBy(col("doc_id"))
 
   /** Cluster construction over any (doc_id, text) frame, duplicate-
     * skew-proof: the Jaccard pair graph is built over exact-text
@@ -266,10 +261,12 @@ object Dedup {
     * reps — exactly the label the full pair graph yields. Star edges
     * are gated on the rep having ≥ 1 shingle, preserving the
     * "shingle-less docs are singletons" semantics of the pair SQL
-    * the oracle closes over.
+    * the oracle closes over. Rows come back UNORDERED (the pair-core
+    * convention): [[clusters]] sorts at the edge, and the label
+    * consumers ([[clusterRollup]], [[Quality.dedupKeepbest]]) join
+    * and aggregate.
     */
-  private[graft] def clustersDocs(docs: DataFrame, maxIters: Int,
-      star: Boolean): DataFrame = {
+  private[graft] def clustersDocs(docs: DataFrame, maxIters: Int): DataFrame = {
     val (reps, membership) = collapseByText(docs)
     val sh = Text.shingleSetOf(reps).materialized
     val repPairs = Text.ngramJaccardOn(sh, 0.5).select(col("d1"), col("d2"))
@@ -279,109 +276,17 @@ object Dedup {
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("d1"), col("rep").as("d2"))
     clustersOf(docs.select(col("doc_id")), repPairs.unionByName(starEdges),
-      maxIters, star)
+      maxIters)
   }
 
-  /** Same clustering over any (doc_id) node set + (d1, d2) pair list. */
+  /** Same clustering over any (doc_id) node set + (d1, d2) pair list
+    * (unordered rows).
+    */
   private[graft] def clustersOf(docs: DataFrame, pairs: DataFrame,
-      maxIters: Int, star: Boolean): DataFrame = {
-    val labels = if (star) starLabels(docs, pairs, maxIters)
-      else propagateLabels(docs, pairs, maxIters)
-    labels
+      maxIters: Int): DataFrame =
+    starLabels(docs, pairs, maxIters)
       .select(col("doc_id"), col("label").as("cluster_id"),
         (col("doc_id") === col("label")).cast("long").as("is_keeper"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def propagateLabels(docs: DataFrame, pairs: DataFrame, maxIters: Int): DataFrame = {
-    // materialize the pair list BEFORE mirroring it: a union's
-    // branches share no computation — lazy self-union evaluates the
-    // entire candidate-generation plan twice, and cache() alone can't
-    // stop it (both branches race the same job before either fills
-    // the cache). localCheckpoint = eager one-time evaluation, no
-    // CacheManager pin (blocks free with the RDD), and the pair list
-    // is output-sized — orders of magnitude below the candidate
-    // volume that produced it — so pinning it is cheap at any scale
-    val p = pairs.materialized
-    // Only the candidate-pair plan (already materialized in `p`
-    // above) ran adaptively; from here on the loop plans on a
-    // conf-ISOLATED session clone ([[graft.PlanScope]], round 15 —
-    // the caller's session is never mutated, so a concurrent query
-    // keeps its AQE/partitions) with AQE off and shuffle partitions
-    // pinned to the graph-loop law (round 14: mirrored pair rows
-    // from the materialized pair count, one cheap block-scan action;
-    // session conf the ceiling). The edge build runs INSIDE the
-    // scope on purpose: hash-partitioning the (usually large) edge
-    // list on its join key ONCE at the law's width before caching
-    // lets every round's dst-keyed join read it straight from the
-    // cache, co-partitioned with the round state (the pagerank
-    // discipline; plan asserted in GraphSpec for that twin loop).
-    val spark = docs.sparkSession
-    val parts = Graph.loopShufflePartitions(spark, p.count())
-    PlanScope.static(spark, parts) { scope =>
-      val ps = PlanScope.rebind(scope, p)
-      val edges = ps.union(ps.select(col("d2"), col("d1")))
-        .toDF("src", "dst").repartition(col("dst")).cache()
-      edges.count()
-      var labels = PlanScope.rebind(scope, docs)
-        .withColumn("label", col("doc_id"))
-        .repartition(col("doc_id")).materialized
-      try {
-        var converged = false
-        var it = 0
-        var prevUpd: DataFrame = labels // the seed frame dies with round 1
-        while (!converged && it < maxIters) {
-          // localCheckpoint, not cache: the round's plan references
-          // `labels` twice (here and in the changed-count below), so
-          // without lineage truncation the LOGICAL plan doubles per round
-          // and optimizer time goes exponential past ~10 rounds — cache
-          // only dodges recomputation, not re-planning. The round carries
-          // its own `chg` flag, so the convergence check is a filter-count
-          // over the materialized checkpoint — no extra join job.
-          val updated = graft.Materialize.round(propagationRound(edges, labels), eager = true)
-          // the round before last is dead once this round's EAGER
-          // checkpoint exists (labels is a projection over `updated`,
-          // so `updated` itself must outlive the loop)
-          if (prevUpd != null) graft.Materialize.release(prevUpd)
-          prevUpd = updated
-          val changed = updated.filter(col("chg")).count()
-          labels = updated.select(col("doc_id"), col("label"))
-          converged = changed == 0
-          it += 1
-        }
-        require(converged, s"label propagation did not converge in $maxIters rounds")
-        labels
-      } finally {
-        // release INSIDE the finally: the non-convergence require above
-        // is an expected exit for pathological graphs (the diameter-40
-        // spec provokes it), and an edges.cache() pin that survives the
-        // exception is exactly the CacheManager leak DupSkewSpec's
-        // hygiene assert exists to catch. The TREE form on purpose:
-        // edges' plan nests the dead materialized pair frame `p`, whose
-        // checkpoint blocks the cache unpersist alone would leak to the
-        // async ContextCleaner — both frames are owned by this loop.
-        graft.Materialize.releaseTree(edges)
-      }
-    }
-  }
-
-  /** One min-label propagation round over (src, dst) edges and
-    * (doc_id, label) labels — factored out so its PLAN is directly
-    * assertable (driver-loop rounds never surface in a registered
-    * query's final plan): two doc-keyed hash joins + one aggregation,
-    * nothing may degenerate to a nested loop.
-    */
-  private[graft] def propagationRound(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
-      .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-    // `chg` rides along so the driver's convergence check needs no
-    // join against the previous labels — true iff a neighbor holds a
-    // strictly smaller label than this node's current one
-    labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-      .select(labels("doc_id"),
-        least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-        (coalesce(col("nbr_min"), col("label")) < col("label")).as("chg"))
-  }
 
   /** Alternating large-star/small-star rounds. Invariant: every edge
     * points from the greater node to the lesser (big → small), so
@@ -391,8 +296,7 @@ object Dedup {
     * alternation instead of shrinking one hop. At convergence the
     * edge set is a star per component (each node → component min);
     * the round fingerprint (edge count + order-independent hash sum)
-    * is one tiny aggregate per round, like propagation's changed
-    * count.
+    * is one tiny aggregate per round.
     */
   private def sym(e: DataFrame): DataFrame =
     e.union(e.select(col("v"), col("u"))).toDF("u", "v")
@@ -421,7 +325,7 @@ object Dedup {
 
   /** One large-star + small-star alternation over a (u, v) edge list
     * (invariant: u > v) — factored out so its PLAN is directly
-    * assertable, like propagationRound and pagerankRound: key-
+    * assertable, like pagerankRound: key-
     * partitioned hash aggregations and equi-joins over the edge list
     * only; nothing may degenerate to a nested loop or broadcast the
     * node-sized min table.
@@ -441,13 +345,12 @@ object Dedup {
     // the previous round's — cache dodges recomputation but the
     // LOGICAL plan still grows and optimizer time compounds per
     // round; checkpointing truncates the lineage to the materialized
-    // partitions (propagation's one-join rounds tolerate the growth,
-    // these multi-op rounds do not)
+    // partitions
     val pairEdges = pairs
       .select(greatest(col("d1"), col("d2")).as("u"), least(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v")).distinct().materialized
     val fp0 = fingerprint(pairEdges)
-    // rounds run with AQE off (the pagerank/propagation discipline:
+    // rounds run with AQE off (the pagerank discipline:
     // fixed-shape tiny stages over checkpointed inputs re-planned
     // adaptively is pure latency); the candidate-pair plan above
     // already materialized adaptively. Shuffle partitions pinned to
@@ -707,67 +610,8 @@ object Dedup {
     * constants). Scale shape: each method keeps its own; grading
     * joins are pair-keyed over candidate-pair-sized frames (already
     * sub-corpus by the collapse/banding guarantees) and the final
-    * card is one bounded row per method. The four pair sets are
-    * [[pairArtifact]] entries (train-once-per-corpus-per-JVM, the
-    * lm_score contract): a warm re-grade pays only the grading
-    * joins, not the candidate pipelines.
+    * card is one bounded row per method.
     */
-  /** Per-(method, corpus dir) PAIR artifacts for [[dedupEval]] — the
-    * lm_score scored-artifact contract applied to the near-dup pair
-    * outputs: each method's (d1, d2) pair set is deterministic in the
-    * corpus, so memoizing the materialized projection can never
-    * change the card; it only stops a WARM dedup_eval from re-paying
-    * all four candidate-generation pipelines (the card's cost is the
-    * sum of its parts by construction — with the artifacts it drops
-    * to just the grading joins). The cold path (first run per corpus
-    * dir per JVM) computes and stores; a frame from a stopped session
-    * is detected by identity and rebuilt; entries are localCheckpoint
-    * blocks (never CacheManager) reclaimed when replaced.
-    */
-  private val pairCache = new graft.ArtifactCache("dedup_pairs",
-    "materialized (d1, d2) near-dup pair frames, keyed per (method, corpus)")
-
-  private def pairArtifact(method: String, dir: String, spark: SparkSession)(
-      compute: => DataFrame): DataFrame =
-    pairCache.getOrCompute(spark, dir, method)(compute.materialized)
-
-  /** The ngram_jaccard PAIR-SET artifact — the exact-Jaccard ground
-    * truth [[dedupEval]] grades against and
-    * [[Curation.splitLeak]] cells by split, shared so a session pays
-    * the candidate pipeline once per corpus (fingerprint-keyed via
-    * [[graft.ArtifactCache]]).
-    */
-  private[graft] def ngramJaccardPairs(spark: SparkSession,
-      dir: String): DataFrame =
-    pairArtifact("ngram_jaccard", dir, spark) {
-      val (reps, membership) = collapseByText(Tables(spark, dir).documents)
-      Text.ngramJaccardFrom(Text.shingleSetOf(reps).materialized, membership, 0.5)
-        .select(col("d1"), col("d2"))
-    }
-
-  /** Cluster-LABEL artifact (the pairArtifact contract applied to the
-    * connected-component labels): the default-parameter clustering is
-    * deterministic in the corpus, so [[clusterStats]] (and any future
-    * label consumer) reuses one materialized run per corpus dir per
-    * JVM instead of re-paying candidate generation + the contraction
-    * loop. The registered dedup_clusters query stays direct (the
-    * base-operator-benches-cold convention).
-    */
-  private val labelCache = new graft.ArtifactCache("dedup_labels",
-    "materialized connected-component label frames, keyed per corpus")
-
-  private[operators] def labelArtifact(spark: SparkSession, dir: String): DataFrame =
-    labelCache.getOrCompute(spark, dir)(
-      clustersDocs(Tables(spark, dir).documents, maxIters = 20,
-        star = true).materialized)
-
-  /** Test/bench hook: drop the memoized pair and label artifacts
-    * (also reachable via [[graft.CacheLedger.clearAll]]).
-    */
-  private[graft] def clearPairCache(): Unit = {
-    pairCache.clear(); labelCache.clear()
-  }
-
   def dedupEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // COLD-PATH sharing (the r10 verdict item — at 11.3 s cold this
@@ -775,11 +619,10 @@ object Dedup {
     // and the exact truth each re-running the exact-text collapse and
     // three of them re-deriving shingle-class scans): the four
     // candidate pipelines feed from ONE collapse and ONE shingle
-    // scan, built lazily INSIDE the call (never a cross-query cache)
-    // so a warm re-grade — artifacts hot — touches none of it. Each
-    // method's tail is the standalone operator's own post-collapse
-    // code path (ngramJaccardFrom/minhashFrom/…Collapsed), so every
-    // artifact is bit-identical to what the registered query emits.
+    // scan, built lazily INSIDE the call. Each method's tail is the
+    // standalone operator's own post-collapse code path
+    // (ngramJaccardFrom/minhashFrom/…Collapsed), so every pair set is
+    // bit-identical to what the registered query emits.
     val docs = Tables(spark, dir).documents
     // shared-state accessors are SYNCHRONIZED: the four cold
     // pipelines run as concurrent jobs below, and the first toucher
@@ -811,8 +654,9 @@ object Dedup {
     // shared inputs — schedule them concurrently (what a cluster
     // deployment does with a multi-method evaluation: one pipeline's
     // shuffle barriers leave executors idle that another can fill).
-    // ArtifactCache.getOrCompute is already race-safe (compute runs
-    // outside the bin lock; a lost race unpersists the loser).
+    // Each arm MATERIALIZES its pair set: the shared intermediates
+    // are released below, and the truth set has three consumers
+    // (the tagged union, the grading join, the truth total).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -823,28 +667,24 @@ object Dedup {
         // presentation sort would be dead weight here
         val futs = Seq(
           "ngram_jaccard" -> scala.concurrent.Future(
-            pairArtifact("ngram_jaccard", dir, spark)( // graded 4x
-              Text.ngramJaccardFrom(shingleSet, collapsed._2, 0.5)
-                .select(col("d1"), col("d2")))),
+            Text.ngramJaccardFrom(shingleSet, collapsed._2, 0.5)
+              .select(col("d1"), col("d2")).materialized),
           "dedup_minhash" -> scala.concurrent.Future(
-            pairArtifact("dedup_minhash", dir, spark)(
-              minhashFrom(shingleHash, collapsed._2)
-                .select(col("d1"), col("d2")))),
+            minhashFrom(shingleHash, collapsed._2)
+              .select(col("d1"), col("d2")).materialized),
           "winnow_pairs" -> scala.concurrent.Future(
-            pairArtifact("winnow_pairs", dir, spark)(
-              Text.winnowPairsCollapsed(collapsed._1, collapsed._2)
-                .select(col("id1").as("d1"), col("id2").as("d2")))),
+            Text.winnowPairsCollapsed(collapsed._1, collapsed._2)
+              .select(col("id1").as("d1"), col("id2").as("d2")).materialized),
           "dedup_fuzzy_text" -> scala.concurrent.Future(
-            pairArtifact("dedup_fuzzy_text", dir, spark)(
-              Text.dedupFuzzyTextCollapsed(collapsed._1, collapsed._2)
-                .select(col("id1").as("d1"), col("id2").as("d2")))))
+            Text.dedupFuzzyTextCollapsed(collapsed._1, collapsed._2)
+              .select(col("id1").as("d1"), col("id2").as("d2")).materialized))
         futs.map { case (n, f) =>
           n -> scala.concurrent.Await.result(f,
             scala.concurrent.duration.Duration.Inf)
         }
       } finally {
-        // the shared intermediates are dead once the artifacts exist
-        // (each artifact is its own checkpoint) — free them HERE so a
+        // the shared intermediates are dead once the pair sets exist
+        // (each pair set is its own checkpoint) — free them HERE so a
         // failed pipeline future can't leak the pins (r11 ADVICE; the
         // CacheHygieneSpec leak class). On the failure path the other
         // futures may still be running, so drain the pool first —
@@ -888,6 +728,17 @@ object Dedup {
       .orderBy(col("method"))
   }
 
+  /** The ngram_jaccard pair core over a corpus dir: the exact-Jaccard
+    * (d1, d2) pairs (τ = 0.5), UNORDERED — [[Curation.splitLeak]]
+    * cells them by split.
+    */
+  private[graft] def ngramJaccardPairs(spark: SparkSession,
+      dir: String): DataFrame = {
+    val (reps, membership) = collapseByText(Tables(spark, dir).documents)
+    Text.ngramJaccardFrom(Text.shingleSetOf(reps).materialized, membership, 0.5)
+      .select(col("d1"), col("d2"))
+  }
+
   /** Size-class cap for [[clusterStats]] (classes 1..8 exact, 9 =
     * "9 or more").
     */
@@ -928,7 +779,8 @@ object Dedup {
     */
   private[graft] def clusterRollup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val labels = labelArtifact(spark, dir)
+    // one consumer (the word join below): no checkpoint, no root sort
+    val labels = clustersDocs(docs, maxIters = 20)
     val nw = docs.select(col("doc_id"),
       size(words(col("text"))).cast("long").as("nw"))
     // ONE corpus scan (round 16, guide §1.2): the old shape scanned

@@ -208,7 +208,7 @@ object Graph {
   /** One PageRank round over (src, dst) edges, the static (id,
     * outdeg) base and the (id, pr) rank state — factored out so its
     * PLAN is directly assertable (the driver-loop discipline shared
-    * with [[Dedup.propagationRound]] and BPE's pair counts): one
+    * with [[Dedup.starRound]] and BPE's pair counts): one
     * id-keyed base⋈rank join, one src-keyed hash join, one dst-keyed
     * aggregation, one left join back — nothing may degenerate to a
     * nested loop or a single partition.
@@ -454,21 +454,6 @@ object Graph {
     math.min(96, math.max(16, 4 * bits + 8))
   }
 
-  /** The memoized CONVERGED labeling artifact shared by
-    * [[graphCommunities]] and [[communityStats]] (the split_leak /
-    * dedup_eval scored-artifact convention, applied per the r12
-    * advisory: the two most expensive bench queries were each
-    * running the full LPA loop — the priciest graph loop in the
-    * engine, twice, to produce one labeling and its grade). Columns
-    * (id, lbl, rounds_used, converged); values are
-    * [[Materialize.eager]] roots keyed by corpus dir + fingerprint,
-    * registered on the [[graft.CacheLedger]] (Bench's per-query
-    * drain keeps its numbers cold; warm-path evidence lives in
-    * GraphSpec, where warmth is the contract).
-    */
-  private val lpaCache = new graft.ArtifactCache("lpa_labels",
-    "converged LPA trade-graph labeling (id, lbl, rounds_used, converged) per corpus dir")
-
   /** Target mirrored-edge rows per shuffle partition for the graph
     * driver loops — ~500k × 48 B/row ≈ 24 MB partitions, well under
     * executor task memory at any skew the trade graph can produce.
@@ -598,31 +583,6 @@ object Graph {
   private[graft] def lpaMeasuredRound(edges: DataFrame): LpaRound =
     if (lpaChooseSkewSafe(edges)) lpaRoundSkewSafe else lpaRound
 
-  /** Corpus-dir labeling through the [[lpaCache]] artifact: a cold
-    * call runs [[lpaFixpoint]] (borrowing `sharedEdges` if the
-    * caller already built the mirrored list, so a cold
-    * community_stats builds edges exactly once); a warm call returns
-    * the retained frame. Consumers must not release the result —
-    * the ledger owns it.
-    */
-  private def lpaLabels(spark: SparkSession, dir: String,
-      sharedEdges: Option[DataFrame], parts: Int): DataFrame =
-    lpaCache.getOrCompute(spark, dir) {
-      // the whole compute — INCLUDING a cold edge build — runs under
-      // the loop partition law, so edges and round state co-partition
-      // at the same count (a lent sharedEdges frame must have been
-      // built under the same law: both callers derive `parts` from
-      // the same lineitem count)
-      PlanScope.static(spark, parts) { loop =>
-        val t = Tables(loop, dir)
-        val nodes = tradeNodes(t.customer, t.supplier)
-        val edges = sharedEdges.map(PlanScope.rebind(loop, _))
-          .getOrElse(mirroredTradeEdges(t.orders, t.lineitem))
-        try lpaFixpoint(nodes, edges)()
-        finally if (sharedEdges.isEmpty) Materialize.release(edges)
-      }
-    }
-
   /** Final [[graphCommunities]] assembly over a labeling: community
     * sizes via one lbl-keyed agg + join — node-count-sized both
     * sides (SHUFFLE_HASH, never broadcast).
@@ -657,35 +617,13 @@ object Graph {
     * a zero-exchange join-back; per-round state is the minimal
     * (id, lbl, chg) triple under the pagerank checkpoint discipline
     * ([[graft.Materialize.round]]). Only the final assembly joins
-    * community sizes; the labeling itself is the shared [[lpaCache]]
-    * artifact [[communityStats]] grades without re-running the loop.
+    * community sizes.
     */
   def graphCommunities(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val parts = loopShufflePartitions(spark, t.lineitem.count())
-    val labels = lpaLabels(spark, dir, None, parts)
-    // EAGER copy, inside the loop scope: (a) the returned frame no
-    // longer references the ledger-owned `lpa_labels` blocks, so a
-    // CacheLedger.drain / fingerprint eviction between construction
-    // and the caller's collect can no longer kill the collect (the
-    // r13 advisory window); (b) the assembly's two exchanges run at
-    // the loop partition law instead of the session width. The copy
-    // is one write+read of the result (node-count-sized, linear) —
-    // and MEMOIZED next to the labeling (sub="communities", the r14
-    // advisory: repeated warm calls used to pin a fresh eager copy
-    // each until the ContextCleaner caught up; now they return the
-    // one ledger-owned frame, which consumers must not release).
-    lpaCache.getOrCompute(spark, dir, sub = "communities") {
-      PlanScope.static(spark, parts) { loop =>
-        Materialize.eager(communitiesFrom(PlanScope.rebind(loop, labels)))
-      }
-    }
+    graphCommunitiesOn(t.customer, t.supplier, t.orders, t.lineitem)
   }
 
-  /** Uncached fixture/spec path: same loop, same assembly, no
-    * artifact retention (EmptyCorpusSpec and the GraphSpec planted
-    * fixtures drive synthetic tables with no corpus dir to key on).
-    */
   private[graft] def graphCommunitiesOn(customer: DataFrame,
       supplier: DataFrame, orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val spark = customer.sparkSession
@@ -720,35 +658,20 @@ object Graph {
     * Scale shape: one degree agg (combinable), one internal-edge
     * pass — edges ⋈ labels on src (zero-exchange) ⋈ labels on dst
     * (one exchange) filtered to same-label, then a lbl-keyed
-    * combinable count — and the lbl-keyed stitch, all over the
-    * SHARED [[lpaCache]] labeling (the loop itself runs at most once
-    * per corpus across both graph community queries). The 1-row edge
-    * total and the 1-row convergence meta ride broadcast crossJoins
-    * (the scalar-card convention): `rounds_used` and `converged`
+    * combinable count — and the lbl-keyed stitch over the labeling
+    * (the loop runs once per card, over the edge list the card
+    * grades). The 1-row edge total and the 1-row convergence meta
+    * ride broadcast crossJoins (the scalar-card convention):
+    * `rounds_used` and `converged`
     * (BIGINT 0/1) on every row, so a budget-exhausted labeling
     * announces itself instead of being silently graded (the r12
     * finding).
     */
   def communityStats(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val parts = loopShufflePartitions(spark, t.lineitem.count())
-    PlanScope.static(spark, parts) { loop =>
-      // edges built HERE and lent to a cold labeling compute, so a
-      // cold card builds the mirrored list exactly once; a warm card
-      // (labeling artifact hot) pays only the card's own passes
-      val tl = Tables(loop, dir)
-      val edges = mirroredTradeEdges(tl.orders, tl.lineitem)
-      try {
-        // lpaLabels runs its OWN isolated scope off the parent and
-        // rebinds the lent edges into it; the returned ledger frame
-        // is parent-bound, so rebind it into THIS scope for the card
-        val labels = lpaLabels(spark, dir, Some(edges), parts)
-        gradeCommunities(PlanScope.rebind(loop, labels), edges)
-      } finally Materialize.release(edges)
-    }
+    communityStatsOn(t.customer, t.supplier, t.orders, t.lineitem)
   }
 
-  /** Uncached fixture/spec path (the [[graphCommunitiesOn]] twin). */
   private[graft] def communityStatsOn(customer: DataFrame,
       supplier: DataFrame, orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val spark = customer.sparkSession

@@ -50,57 +50,31 @@ object LangModel {
     * allowlisted in the plan guard); docs with fewer than 2 words
     * have no bigrams and are out of scope on both engines.
     */
-  def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    // train + score unconditionally (this query IS the training cost,
-    // the bpe_train convention) and refresh the artifact
-    // [[ccnetBuckets]] reuses
-    val fresh = scoreCache.refresh(spark, dir)(trainAndScore(spark, dir))
-    fresh.orderBy(col("doc_id"))
-  }
+  def lmScore(spark: SparkSession, dir: String): DataFrame =
+    lmScoreOn(Tables(spark, dir).documents)
 
   private[graft] def lmScoreOn(docs: DataFrame): DataFrame =
-    lmPpm(docs).orderBy(col("doc_id"))
+    trainAndScore(docs).orderBy(col("doc_id"))
 
-  /** Scored-corpus ARTIFACT shared by the LM family (the bpe_encode
-    * artifact-cache contract, applied to CCNet's intermediate): the
-    * per-doc (doc_id, n_bigrams, lm_ppm) frame is deterministic in
-    * the corpus — training is add-one bigram counting, scoring is
-    * floor division on the ppm lattice — so memoizing it per corpus
-    * dir can never change an answer; it only stops every downstream
-    * consumer (ccnet_buckets today, a streaming admission gate
-    * tomorrow) from re-paying the model train + score join that
-    * lm_score already ran. This mirrors CCNet's production shape:
-    * the LM is trained once and shipped as a file; per-shard scores
-    * are materialized once and reused by every bucket split.
-    *
-    * Contract notes (the [[graft.ArtifactCache]] contract, same as
-    * the BPE merge table): lookups key on the corpus FINGERPRINT, so
-    * a corpus regenerated under the same path recomputes and the
-    * stale frame is unpersisted on eviction; entries are
-    * [[graft.Materialize.eager]] products (under the default strategy,
-    * localCheckpoint blocks — never CacheManager, so
-    * CacheHygieneSpec's invariant holds); stale frames from a stopped
-    * session are detected by identity and rebuilt. Registered in
-    * [[graft.CacheLedger]].
+  /** The one scoring path of [[lmScoreOn]] and [[ccnetBucketsOn]]:
+    * train the bigram model on `docs` and score every doc — the
+    * MATERIALIZED per-doc (doc_id, n_bigrams, lm_ppm) frame. The
+    * bigram instances feed four consumers (c2, c1, V, the scoring
+    * join), so they materialize once; the scores materialize too,
+    * so the instances — corpus-sized, far larger than the scores —
+    * are released before the caller's action, and the caller's plan
+    * carries no scalar vocabulary aggregate.
     */
-  private val scoreCache = new graft.ArtifactCache("lm_scores",
-    "materialized per-doc (doc_id, n_bigrams, lm_ppm) frames, keyed per corpus")
-
-  private def trainAndScore(spark: SparkSession, dir: String): DataFrame = {
-    val bi = bigramInstances(Tables(spark, dir).documents).materialized
-    val scored = lmPpmFromBi(bi).materialized
-    // the bigram-instance blocks (the corpus-sized intermediate, far
-    // larger than the per-doc scores) are dead once the artifact is
-    // materialized: release them NOW instead of at the async
-    // ContextCleaner's leisure — measured at the R=20 scale point,
-    // leaving them to GC made back-to-back trains degrade 11 → 26 s
-    // as dead blocks accumulated faster than collection
+  private def trainAndScore(docs: DataFrame): DataFrame = {
+    val bi = bigramInstances(docs).materialized
+    val scored = lmPpm(bi).materialized
+    // release NOW instead of at the async ContextCleaner's leisure —
+    // measured at the R=20 scale point, leaving them to GC made
+    // back-to-back trains degrade 11 → 26 s as dead blocks
+    // accumulated faster than collection
     graft.Materialize.release(bi)
     scored
   }
-
-  private def scoredArtifact(spark: SparkSession, dir: String): DataFrame =
-    scoreCache.getOrCompute(spark, dir)(trainAndScore(spark, dir))
 
   /** Bigram INSTANCES (not distinct — counts are the model); the
     * `when` guard keeps sequence(0, -1) from fabricating grams on
@@ -114,14 +88,6 @@ object LangModel {
           .as("g"))
       .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"))
 
-  /** Unordered per-doc (doc_id, n_bigrams, lm_ppm) — the scoring core
-    * shared by [[lmScoreOn]] and [[ccnetBucketsOn]].
-    */
-  private def lmPpm(docs: DataFrame): DataFrame =
-    // four consumers (c2, c1, V, scoring join): eager materialization
-    // — reused blocks, no CacheManager pin under the default strategy
-    lmPpmFromBi(bigramInstances(docs).materialized)
-
   // Round-16 note (measured, left alone): deriving c1/vocab from the
   // pair-count table instead of the instances looks like two saved
   // passes, but each of the three agg branches already combines
@@ -133,7 +99,11 @@ object LangModel {
   // SLOWER at sf0.1). The gate trainer below is the different case:
   // its consumers are separate collect ACTIONS, so there the shared
   // materialized pair table genuinely removes full instance scans.
-  private[graft] def lmPpmFromBi(bi: DataFrame): DataFrame = {
+  /** Unordered per-doc (doc_id, n_bigrams, lm_ppm) over the bigram
+    * instances — the scoring core of [[trainAndScore]]. Callers pass
+    * a materialized `bi`: it has four consumers.
+    */
+  private[graft] def lmPpm(bi: DataFrame): DataFrame = {
     val c2 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val c1 = bi.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val v = bi.agg(countDistinct(col("w2")).as("vocab"))
@@ -191,7 +161,7 @@ object LangModel {
       modelCap: Int = GateModelCap)
       : (Map[(String, String), Long], Map[String, Long], Long, Seq[(String, Long)]) = {
     // ONE pass over the corpus-sized instances (round 16, the
-    // lmPpmFromBi play): the capped c2 collect, the c1 marginal and
+    // lmPpm play): the capped c2 collect, the c1 marginal and
     // the vocab scalar all derive from the pair-count table — the
     // instances release as soon as it materializes
     val bi = bigramInstances(docs).materialized
@@ -271,22 +241,17 @@ object LangModel {
     * engines (the [[lmScore]] contract).
     */
   def ccnetBuckets(spark: SparkSession, dir: String): DataFrame =
-    // consume the scored-corpus artifact (train it if lm_score hasn't
-    // run this session) — the bucket split itself is all this query
-    // should pay for
-    ccnetFromScored(scoredArtifact(spark, dir),
-      Tables(spark, dir).documents)
+    ccnetBucketsOn(Tables(spark, dir).documents)
 
-  private[graft] def ccnetBucketsOn(docs: DataFrame): DataFrame =
-    ccnetFromScored(lmPpm(docs), docs)
-
-  private def ccnetFromScored(ppm: DataFrame, docs: DataFrame): DataFrame = {
+  private[graft] def ccnetBucketsOn(docs: DataFrame): DataFrame = {
+    val ppm = trainAndScore(docs)
     // three consumers (histogram, per-lang counts, the final bucket
     // join): eager localCheckpoint — reused blocks, no pin
     val scored = ppm
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"), col("lm_ppm"))
       .materialized
+    graft.Materialize.release(ppm)
     val th = tertileThresholds(scored)
     scored.join(broadcast(th), "lang")
       .select(col("doc_id"), col("lang"), col("lm_ppm"),

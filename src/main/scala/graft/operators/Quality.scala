@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize.MatOps
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -208,13 +209,13 @@ object Quality {
     * ASC) — rule gate first (never keep a rule-rejected copy over an
     * admitted one), score as tiebreak, id for determinism.
     *
-    * Composition of REGISTERED operators (cluster labels via the
-    * shared artifact, gate/score via the single rule definitions —
+    * Composition of REGISTERED operators (cluster labels via
+    * [[Dedup.clustersDocs]], gate/score via the single rule definitions —
     * [[Text.withGopherFlags]] and [[Text.withQualityScore]], the
     * exact expression trees gopher_quality and quality_score
     * register), so the keep-list can't drift from what
     * dedup_clusters and gopher_quality each report. Scale shape: the
-    * label artifact's machinery (star contraction, O(log n) rounds),
+    * clustering machinery (star contraction, O(log n) rounds),
     * then ONE map-heavy scan computing BOTH the gate and the score
     * (round 15: the two chains share the same normalized word array
     * — `words(text)` ≡ withQualityScore's `w` by definition — so
@@ -231,11 +232,13 @@ object Quality {
     */
   def dedupKeepbest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val labels = Dedup.labelArtifact(spark, dir)
+    val labels = Dedup.clustersDocs(docs, maxIters = 20)
       .select(col("doc_id"), col("cluster_id"))
     val qual = Text.withGopherFlags(Text.withQualityScore(docs))
       .select(col("doc_id"), col("keep").as("gq"), col("score"))
-    val base = labels.join(qual, "doc_id")
+    // two consumers (the per-cluster argmax and the join back):
+    // materialize once instead of re-planning labels ⋈ quality twice
+    val base = labels.join(qual, "doc_id").materialized
     val best = graft.plans.TopK.topKPerKey(base,
         keys = Seq(col("cluster_id")),
         order = Seq(col("gq").desc, col("score").desc, col("doc_id").asc), k = 1)

@@ -1114,7 +1114,8 @@ object Text {
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("d1"), col("rep").as("d2"))
     Dedup.clustersOf(docs.select(col("doc_id")),
-      repPairs.unionByName(starEdges), maxIters = 20, star = true)
+      repPairs.unionByName(starEdges), maxIters = 20)
+      .orderBy(col("doc_id"))
   }
 
   /** Counter budget for [[freqWords]]. Above the live vocabulary

@@ -46,14 +46,8 @@ object Tokenizer {
     * additionally proves equality against an independent in-memory
     * reference trainer on the full corpus.
     */
-  def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // train unconditionally (this query IS the training cost) and
-    // refresh the artifact encode reuses
-    val m = trainMerges(Tables(spark, dir).documents, NumMerges)
-    mergeCache.put((dir, corpusFingerprint(spark, dir), NumMerges), m)
-    m.toDF("rank", "lsym", "rsym", "pair_count").orderBy(col("rank"))
-  }
+  def bpeTrain(spark: SparkSession, dir: String): DataFrame =
+    bpeTrainOn(spark, Tables(spark, dir).documents, NumMerges)
 
   private[graft] def bpeTrainOn(spark: SparkSession, docs: DataFrame,
       numMerges: Int): DataFrame = {
@@ -244,93 +238,15 @@ object Tokenizer {
     * compression ratio (tokens per word < chars per word) is the
     * learning signal the spec asserts.
     *
-    * The merge table is an ARTIFACT, not part of the encode: a
-    * production pipeline trains once and tokenizes the corpus many
-    * times (and the reference tokenizers ship vocab files). Encode
-    * therefore memoizes the trained table per (corpus dir, corpus
-    * fingerprint) for the JVM's lifetime — training is deterministic
-    * in the corpus, so the memo can never change an answer, it only
-    * stops every encode from re-paying the 30-round training job
-    * (measured 3.7 s → 0.7 s at sf0.1 when train already ran). The
-    * [[corpusFingerprint]] key component (file mtimes+sizes) makes a
-    * corpus regenerated under the SAME path train fresh;
-    * [[clearModelCaches]] is the explicit harness hook.
+    * Encode trains the merge table inline (the bpe_train pass, then
+    * the map-side encode): training is deterministic in the corpus,
+    * so encode and train agree on the table by construction.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val merges = memoizedTrain(docs, dir).map { case (_, l, r, _) => (l, r) }
+    val merges = trainMerges(docs, NumMerges).map { case (_, l, r, _) => (l, r) }
     bpeEncodeOn(docs, merges)
   }
-
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int), Seq[(Long, String, String, Long)]]()
-
-  /** Cheap corpus fingerprint for the model caches: fold every
-    * documents-table file's (name, modificationTime, length) plus
-    * the file COUNT into one long. Metadata-only (a FileSystem
-    * listing, no data read — works for any Hadoop FS), so a corpus
-    * regenerated under the SAME path gets a fresh key and can never
-    * be encoded with a stale model. Per-file hashes combine by SUM
-    * (order-insensitive: Hadoop local listings have no order
-    * guarantee, and a reordered listing of identical files is the
-    * same corpus). Caveat: a rewrite within filesystem mtime
-    * granularity that reproduces every file name AND size is still
-    * invisible — harnesses that regenerate corpora in-place should
-    * call [[clearModelCaches]] (the fuzz/scale tools do).
-    */
-  private[graft] def corpusFingerprint(spark: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) 0L
-    else {
-      var h = 1125899906842597L
-      var n = 0L
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val st = it.next()
-        var f = st.getPath.getName.hashCode.toLong
-        f = f * 1000003L + st.getModificationTime
-        f = f * 1000003L + st.getLen
-        h += f * 2654435761L
-        n += 1
-      }
-      h * 31 + n
-    }
-  }
-
-  /** Test/bench hook for corpus rebuilds in one JVM. Historically
-    * "drop every memoized model (both tokenizer families)"; since
-    * this is the hook harness docs point at, it now delegates to
-    * [[graft.CacheLedger.clearAll]] and drops EVERY registered
-    * artifact family (tokenizer models, LM scores, dedup pair/label
-    * frames) — clearing more than the models is always safe (the
-    * artifacts are deterministic per corpus; only warm-start cost
-    * moves) and leaves no family a rebuilt-in-place corpus could
-    * serve stale.
-    */
-  def clearModelCaches(): Unit = {
-    graft.CacheLedger.touchAll()
-    graft.CacheLedger.clearAll()
-  }
-
-  // the ledger rows for the two driver-side model memos (bounded
-  // Seqs — no executor storage; fingerprint-keyed by construction)
-  graft.CacheLedger.register("bpe_merges",
-    "driver-side BPE merge tables, keyed per (corpus, fingerprint, merges)")(
-    () => mergeCache.clear())(() => mergeCache.size)
-  graft.CacheLedger.register("unigram_models",
-    "driver-side Unigram vocab models, keyed per (corpus, fingerprint)")(
-    () => unigramCache.clear())(() => unigramCache.size)
-
-  /** The artifact lookup for encode: train once per (corpus dir,
-    * corpus fingerprint) per JVM unless bpe_train already ran and
-    * stored it.
-    */
-  private def memoizedTrain(docs: DataFrame,
-      dir: String): Seq[(Long, String, String, Long)] =
-    mergeCache.computeIfAbsent(
-      (dir, corpusFingerprint(docs.sparkSession, dir), NumMerges),
-      _ => trainMerges(docs, NumMerges))
 
   private[graft] def bpeEncodeOn(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame =
@@ -383,11 +299,8 @@ object Tokenizer {
     * (the bpe_train convention) plus lossless round-trip and
     * compression.
     */
-  def unigramTrain(spark: SparkSession, dir: String): DataFrame = {
-    val model = trainUnigramModel(Tables(spark, dir).documents)
-    unigramCache.put((dir, corpusFingerprint(spark, dir)), model)
-    unigramModelDf(spark, model)
-  }
+  def unigramTrain(spark: SparkSession, dir: String): DataFrame =
+    unigramModelDf(spark, trainUnigramModel(Tables(spark, dir).documents))
 
   private[graft] def unigramModelDf(spark: SparkSession,
       model: Seq[(String, Long)]): DataFrame = {
@@ -446,23 +359,15 @@ object Tokenizer {
     capped
   }
 
-  private val unigramCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(String, Long)]]()
-
   /** unigram_encode — Viterbi-tokenize every document with the
     * trained model: one [[graft.functions.UnigramEncodeText]] eval
     * per doc, map-side inside the scan stage, corpus never joined or
-    * shuffled (the output sort is the only exchange). Same artifact
-    * contract as bpe_encode: the model memoizes per (corpus dir,
-    * corpus fingerprint) for the JVM's lifetime (training is
-    * deterministic in the corpus; the fingerprint invalidates on a
-    * regenerated corpus).
+    * shuffled (the output sort is the only exchange). Trains the
+    * model inline, like bpe_encode.
     */
   def unigramEncode(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val model = unigramCache.computeIfAbsent(
-      (dir, corpusFingerprint(spark, dir)), _ => trainUnigramModel(docs))
-    unigramEncodeOn(docs, model)
+    unigramEncodeOn(docs, trainUnigramModel(docs))
   }
 
   private[graft] def unigramEncodeOn(docs: DataFrame,

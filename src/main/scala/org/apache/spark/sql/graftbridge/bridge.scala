@@ -50,7 +50,7 @@ object Bridge {
     * from inside the package): the DETERMINISTIC settle point for
     * job-count assertions — sleep-polling a counter can under-count
     * on a loaded host when delivery lags the poll window (the r13
-    * advisory on GraphSpec's warm/cold artifact test).
+    * advisory; GraphSpec's cold job budget settles here).
     */
   def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long = 60000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)

@@ -503,28 +503,11 @@ class DedupAnnSpec extends AnyFunSuite {
     // than the default 20-round budget of one-hop label propagation
     val docs = (0L to 40L).toDF("doc_id")
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val star = graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 20, star = true)
+    val star = graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(star.length == 41)
     assert(star.forall(_._2 == 0L), s"not one cluster: ${star.filter(_._2 != 0L).toSeq}")
     assert(star.count(_._3 == 1L) == 1 && star.find(_._3 == 1L).get._1 == 0L)
-    // the flag exists because propagation genuinely can't do this in
-    // the same budget: one hop per round × 40 hops > 20 rounds
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 20, star = false).collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
-  }
-
-  test("star and propagation clusters agree on the real pair graph") {
-    // star contraction is the DEFAULT since round 9 (O(log n) rounds
-    // for any graph shape); propagation is the comparison twin
-    val a = graft.operators.Dedup.clusters(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    val b = graft.operators.Dedup.clusters(spark, sf, star = false)
-      .collect().map(_.toSeq).toSeq
-    assert(a.nonEmpty)
-    assert(a == b, "default (star) variant diverges from propagation on the corpus graph")
   }
 
   test("default clusters kill the drift-chain pathology: 1000-link chain in ≤ 12 rounds") {
@@ -537,16 +520,11 @@ class DedupAnnSpec extends AnyFunSuite {
     val n = 1000L
     val docs = (0L to n).toDF("doc_id")
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("d1", "d2")
-    val out = graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 12, star = true)
+    val out = graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 12)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.length == n + 1)
     assert(out.forall(_._2 == 0L), "chain did not collapse to one component")
     assert(out.count(_._3 == 1L) == 1 && out.find(_._3 == 1L).get._1 == 0L)
-    // the pathology is real: propagation exhausts the same budget
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.clustersOf(docs, pairs, maxIters = 12, star = false).collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
   }
 
   test("a star-contraction round plans equi-joins only — no BNLJ, no broadcast") {
@@ -867,13 +845,6 @@ class DedupAnnSpec extends AnyFunSuite {
     // minhash approximates the SAME tau-0.5 jaccard: high fidelity
     assert(card("dedup_minhash")._4 >= 900000L,
       s"minhash recall ${card("dedup_minhash")._4} ppm vs exact jaccard")
-    // artifact-cache contract: a warm re-grade (pair artifacts
-    // memoized per corpus dir) yields the identical card, and a cold
-    // rebuild after clearing the cache does too
-    val warm = operators.Dedup.dedupEval(spark, sf).collect().map(_.toSeq).toSeq
-    operators.Dedup.clearPairCache()
-    val cold = operators.Dedup.dedupEval(spark, sf).collect().map(_.toSeq).toSeq
-    assert(warm == cold, "warm artifact card diverged from cold rebuild")
   }
 
   test("ann_incremental: partition laws, frozen-centroid cells, growth arithmetic") {

@@ -211,13 +211,13 @@ class DupSkewSpec extends AnyFunSuite {
     operators.Dedup.minhashOn(corpus).count()
     operators.Text.ngramJaccardDocs(corpus, 0.5).count()
     operators.Dedup.simhashOn(corpus).count()
-    operators.Dedup.clustersDocs(corpus, maxIters = 20, star = false).count()
+    operators.Dedup.clustersDocs(corpus, maxIters = 20).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "a dedup-family operator pinned storage in the session CacheManager")
   }
 
   test("dedup_clusters: linear star edges produce the exact component labels") {
-    val out = operators.Dedup.clustersDocs(corpus, maxIters = 20, star = false)
+    val out = operators.Dedup.clustersDocs(corpus, maxIters = 20)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(out.size == nDocs)
     // A group ∪ variant: one component labeled by doc 0

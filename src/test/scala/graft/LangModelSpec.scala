@@ -194,7 +194,7 @@ class LangModelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val bi = operators.LangModel.bigramInstances(
       Tables(spark, sf).documents).localCheckpoint(true)
-    val scored = operators.LangModel.lmPpmFromBi(bi)
+    val scored = operators.LangModel.lmPpm(bi)
     val rows = bi.collect().map(r => (r.getString(1), r.getString(2)))
     val c2 = rows.groupBy(identity).map { case (k, v) => k -> v.length.toLong }
     val c1 = rows.groupBy(_._1).map { case (k, v) => k -> v.length.toLong }

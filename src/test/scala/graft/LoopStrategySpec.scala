@@ -58,12 +58,10 @@ class LoopStrategySpec extends AnyFunSuite {
     val kDefault = sorted(operators.Graph.kCore(spark, sf))
     val cDefault = sorted(SparkEntry.queries("dedup_clusters")(spark, sf))
     withReliable {
-      operators.Dedup.clearPairCache() // labels memoize per (op, dir)
       assert(sorted(operators.Graph.kCore(spark, sf)) == kDefault,
         "loop strategy changed k_core's results")
       assert(sorted(SparkEntry.queries("dedup_clusters")(spark, sf)) == cDefault,
         "loop strategy changed dedup_clusters' results")
     }
-    operators.Dedup.clearPairCache() // don't leak reliable-run artifacts
   }
 }

@@ -62,12 +62,11 @@ class QueryPackSpec extends AnyFunSuite {
     // block grid) run at construction time and the FINAL plan is
     // pure hash-partitioned assembly — each interior stage is still
     // guarded through its own registered query below
-    // lm_score left both lists in round 7: its train+score now
-    // materializes as the LM-family artifact at construction (the
-    // pipeline_e2e pattern above), so the vocabulary-size scalar
-    // aggregate and the broadcast-V cross join run inside the
-    // artifact build and the FINAL plan is a pure artifact scan +
-    // output sort
+    // lm_score left both lists in round 7: its train+score
+    // materializes at construction (the pipeline_e2e pattern above),
+    // so the vocabulary-size scalar aggregate and the broadcast-V
+    // cross join run inside that build and the FINAL plan is a pure
+    // scan of the scores + output sort
     // word_pmi joined round 7 wave 4: its 1-row bigram-total B is
     // the scalar-subquery shape (broadcast cross join + one
     // single-partition aggregate)
@@ -158,10 +157,8 @@ class QueryPackSpec extends AnyFunSuite {
     val roundPlans = Seq(
       "bpe pairCounts" ->
         operators.Tokenizer.pairCounts(vocab),
-      "label propagationRound" ->
-        operators.Dedup.propagationRound(
-          Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"),
-          Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "label")),
+      "star contraction starRound" ->
+        operators.Dedup.starRound(Seq((2L, 1L), (3L, 2L)).toDF("u", "v")),
       "pagerankRound" ->
         operators.Graph.pagerankRound(
           Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"),
