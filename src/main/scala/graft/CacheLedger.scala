@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * every operator derives its intermediates inside the call and
   * releases them, or leaves them to the ContextCleaner, so a
   * many-query run has nothing to warm. [[drain]] is the reset a
-  * harness runs between queries (Bench, Verify, perfbench's
-  * BatchPass and LpaSkewBench do).
+  * harness runs between queries (Bench, Verify and perfbench's
+  * BatchPass do).
   */
 object CacheLedger {
 

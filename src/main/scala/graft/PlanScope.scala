@@ -59,15 +59,4 @@ object PlanScope {
     loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
     rebind(spark, body(loop))
   }
-
-  /** AQE-off-only variant (the q43_hierarchy / scd2 loop shape:
-    * fixed-shape tiny stages over checkpointed inputs, where adaptive
-    * re-planning is pure latency but the session's partition width is
-    * kept).
-    */
-  def staticAqe(spark: SparkSession)(body: SparkSession => DataFrame): DataFrame = {
-    val loop = Bridge.cloneSession(spark)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    rebind(spark, body(loop))
-  }
 }

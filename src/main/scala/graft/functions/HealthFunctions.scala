@@ -26,6 +26,16 @@ object HealthFunctions {
     StructField("timestamp", StringType),
     StructField("heart_rate_bpm", LongType)))
 
+  /** The reference producer's Kafka payload (src/kafka_producer.py:
+    * 23-27): `to_json` of the [[eventSchema]] fields, the timestamp
+    * rendered ISO-8601 with milliseconds and offset.
+    */
+  def eventPayload(patientId: Column, ts: Column, heartRateBpm: Column): Column =
+    to_json(struct(
+      patientId.as("patient_id"),
+      date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("timestamp"),
+      heartRateBpm.as("heart_rate_bpm")))
+
   /** parse_event: raw JSON → struct(patient_id, heart_rate_bpm,
     * event_time). Any failure (malformed JSON, missing field,
     * unparseable timestamp, non-positive rate) yields NULL, matching

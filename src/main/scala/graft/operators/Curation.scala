@@ -1086,17 +1086,16 @@ object Curation {
       .orderBy(col("user_id"))
   }
 
-  /** Path length and card size for [[eventPaths]]. */
-  val PathLen = 3
+  /** Card size for [[eventPaths]]. */
   val PathTopK = 50
 
   /** event_paths — frequent behavioral PATH mining (the Sankey /
     * funnel-discovery query behind q24's fixed funnel: q24 measures a
-    * KNOWN sequence; this DISCOVERS which [[PathLen]]-step paths
-    * users actually walk): per user the event stream in strict
-    * (ts, event_id) order, every consecutive [[PathLen]]-gram of
-    * event types as a `a>b>c` path, and the top [[PathTopK]] paths
-    * by occurrence count with their distinct-user reach.
+    * KNOWN sequence; this DISCOVERS which 3-step paths users
+    * actually walk): per user the event stream in strict (ts,
+    * event_id) order, every consecutive 3-gram of event types as a
+    * `a>b>c` path, and the top [[PathTopK]] paths by occurrence count
+    * with their distinct-user reach.
     *
     * Determinism: the window order carries the full (ts_ms,
     * event_id) tie-break, so every path multiset is exact; the final

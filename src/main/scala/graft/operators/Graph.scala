@@ -537,8 +537,8 @@ object Graph {
     * owns its release.
     *
     * `round` is the half-round shape; the default is the measured
-    * choice ([[lpaMeasuredRound]]). The spec and LpaSkewBench pass a
-    * fixed shape to compare both through this same loop.
+    * choice ([[lpaMeasuredRound]]). GraphSpec passes a fixed shape
+    * to check both give identical labels through this same loop.
     */
   private[graft] def lpaFixpoint(nodes: DataFrame, edges: DataFrame)(
       round: LpaRound = lpaMeasuredRound(edges)): DataFrame = {
@@ -803,7 +803,8 @@ object Graph {
     // lost map-side combine was the hub protection), so
     // [[lpaFixpoint]] measures the max degree share once per loop and
     // routes hub-heavy graphs to [[lpaRoundSkewSafe]] instead
-    // (LpaSkewBench quantifies both shapes' per-partition spread).
+    // (evidence/lpa_skew.json records both shapes' per-partition
+    // spread; GraphSpec pins the choice on hub and even edges).
     val counted = lpaJoined(edges, labels, updateSuppliers)
       .repartition(col("dst"))
       .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))

@@ -23,10 +23,8 @@ object Health {
     */
   private[graft] def rawPayload(dfCols: (String, String, String)): org.apache.spark.sql.Column = {
     val (id, ts, value) = dfCols
-    val json = to_json(struct(
-      concat(lit("p"), col(id)).as("patient_id"),
-      date_format(col(ts), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("timestamp"),
-      floor(col(value)).cast("long").as("heart_rate_bpm")))
+    val json = eventPayload(
+      concat(lit("p"), col(id)), col(ts), floor(col(value)).cast("long"))
     when(col("event_id") % 13 === 0, concat(lit("corrupt"), json)).otherwise(json)
   }
 
@@ -157,8 +155,5 @@ object Health {
     hrAlertStatsOn(Tables(spark, dir).events)
 
   private[graft] def hrAlertStatsOn(ev: DataFrame): DataFrame =
-    hrWindowTumblingOn(ev)
-      .groupBy(col("user_id"), col("alert_type"))
-      .agg(count(lit(1)).as("n_alerts"))
-      .orderBy(col("user_id"), col("alert_type"))
+    graft.sources.AlertStore.analyze(hrWindowTumblingOn(ev))
 }

@@ -125,13 +125,6 @@ object Text {
     } else ngramJaccardPrefixOn(sh, threshold)
   }
 
-  /** Exact candidate-pair count the plain inverted index would emit:
-    * Σ f·(f−1)/2 over the shingle document-frequency histogram. One
-    * aggregation whose output is a single row.
-    */
-  private[graft] def plainPairEstimate(sh: DataFrame): Long =
-    pairEstimateAndCount(sh)._1
-
   /** (candidate-pair estimate, total shingle rows) in ONE aggregation
     * pass: Σ f·(f−1)/2 and Σ f over the same document-frequency
     * histogram — the row count is free once the histogram exists.
@@ -387,7 +380,6 @@ object Text {
     * overlap). Integer arithmetic on purpose: the DuckDB oracle
     * replays the same shift-compare loop from COUNT(*).
     */
-  val BloomBitsFloor = 32768L
   val BloomBitsPerShingle = 8L
   val BloomK = 3
 

@@ -4,16 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** File-based alert storage — the reference's "Flink writes alerts to
-  * files, Spark batch-analyzes them" path (README Part 3,
-  * src/spark_batch_analysis.py): JSON for the handoff format the
-  * reference uses, parquet for the results, with explicit schemas on
-  * read (schema inference is a full extra pass at 100 TB — never
-  * infer on the hot path).
+/** File-based storage for BATCH alert rows — the reference's
+  * "alerts to files, Spark batch-analyzes them" path (README Part 3,
+  * src/spark_batch_analysis.py) over the rows
+  * [[graft.operators.Health.hrWindowTumbling]] emits (`user_id`
+  * BIGINT, `window_*_ms`): JSON or CSV, with explicit schemas on read
+  * (schema inference is a full extra pass at 100 TB — never infer on
+  * the hot path).
+  *
+  * It does NOT read the streaming pipeline's alert files:
+  * [[graft.streaming.HealthMonitor.alertJson]] writes `patient_id`
+  * STRING and `window_start`/`window_end` millis, which
+  * [[alertSchema]] reads back with a NULL `user_id` on every row.
   */
 object AlertStore {
 
-  /** Alert record schema as written by the monitoring pipeline. */
+  /** The hr_window_tumbling alert row (not the stream's alertJson). */
   val alertSchema: StructType = StructType(Seq(
     StructField("user_id", LongType),
     StructField("window_start_ms", LongType),
@@ -43,7 +49,4 @@ object AlertStore {
     alerts.groupBy(col("user_id"), col("alert_type"))
       .agg(count(lit(1)).as("n_alerts"))
       .orderBy(col("user_id"), col("alert_type"))
-
-  def writeStats(stats: DataFrame, path: String): Unit =
-    stats.write.mode("overwrite").parquet(path)
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.functions.HealthFunctions.eventPayload
+import graft.sources.v2.HealthSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,13 +11,15 @@ import org.apache.spark.sql.functions._
   * (tachycardia/bradycardia runs), emitted as the exact JSON payload
   * shape the producer sends to Kafka.
   *
-  * Fully deterministic (seeded column arithmetic, no RNG state) and
-  * distributed (spark.range — no driver-side loop), so it can
+  * A batch read of [[HealthSource]], whose row model this is: fully
+  * deterministic (seeded arithmetic, no RNG state) and distributed
+  * (one partition per patient, no driver-side loop), so it can
   * generate test load at any scale: `rate` per patient, any horizon.
   */
 object HealthDataGenerator {
 
-  /** Events as structured rows.
+  /** Events as structured rows (patient_id, event_time_ms,
+    * heart_rate_bpm).
     *
     * @param nPatients  patients p001..pNNN (reference uses 5)
     * @param perPatient events per patient, 10s apart (ref: ~0.1s)
@@ -25,27 +29,14 @@ object HealthDataGenerator {
       spark: SparkSession,
       nPatients: Int = 5,
       perPatient: Long = 1000,
-      startTs: Long = 1735689600000L, // 2025-01-01T00:00:00Z
-      seed: Long = 42L): DataFrame = {
-    val n = nPatients * perPatient
-    // deterministic pseudo-noise from a splitmix-style hash of (i, seed)
-    def noise(i: org.apache.spark.sql.Column, salt: Int) =
-      pmod(hash(i, lit(seed), lit(salt)).cast("long"), lit(1000L))
-    val p = col("id") % nPatients
-    val k = expr(s"id div $nPatients") // integer div, not double `/`
-    val episode = expr(s"(id div $nPatients) div 5")
-    spark.range(n).select(
-      format_string("p%03d", p + 1).as("patient_id"),
-      (lit(startTs) + k * 10000 + p * 7).as("event_time_ms"),
-      // baseline 65-80 per patient (ref: random 65-80), noise -10..15
-      (lit(65) + pmod(p * 31, lit(16)) +
-        (noise(col("id"), 1) % 26 - 10) +
-        // abnormal episodes: every 50th run of 5 events goes hot
-        // (+45: tachycardia), every 83rd goes low (-35: bradycardia)
-        when(episode % 50 === 0, 45)
-          .when(episode % 83 === 1, -35)
-          .otherwise(0)).cast("long").as("heart_rate_bpm"))
-  }
+      startTs: Long = HealthSource.DefaultStartMs,
+      seed: Long = 42L): DataFrame =
+    spark.read.format(classOf[HealthSource].getName)
+      .option("patients", nPatients)
+      .option("perPatient", perPatient)
+      .option("startTs", startTs)
+      .option("seed", seed)
+      .load()
 
   /** The Kafka payload: JSON strings with the reference's field
     * names and ISO-8601 timestamps (kafka_producer.py:23-27).
@@ -54,12 +45,9 @@ object HealthDataGenerator {
       spark: SparkSession,
       nPatients: Int = 5,
       perPatient: Long = 1000,
-      startTs: Long = 1735689600000L,
+      startTs: Long = HealthSource.DefaultStartMs,
       seed: Long = 42L): DataFrame =
     events(spark, nPatients, perPatient, startTs, seed).select(
-      to_json(struct(
-        col("patient_id"),
-        date_format(timestamp_millis(col("event_time_ms")),
-          "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("timestamp"),
-        col("heart_rate_bpm"))).as("value"))
+      eventPayload(col("patient_id"), timestamp_millis(col("event_time_ms")),
+        col("heart_rate_bpm")).as("value"))
 }

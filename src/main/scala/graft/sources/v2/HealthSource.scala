@@ -74,9 +74,12 @@ object HealthSource {
     z ^ (z >>> 31)
   }
 
-  /** The row model: same baselines/episodes family as
-    * [[graft.sources.HealthDataGenerator]] (kafka_producer.py:10-28),
-    * on the connector's own seeded kernel.
+  /** The row model of the synthetic producer (kafka_producer.py:
+    * 10-28; [[graft.sources.HealthDataGenerator]] is a batch read of
+    * this source): per-patient baseline 65-80, noise -10..15 from the
+    * seeded kernel, and abnormal runs — every 50th run of 5 events
+    * goes hot (+45: tachycardia), every 83rd goes low (-35:
+    * bradycardia).
     */
   def heartRate(seed: Long, patient: Int, k: Long): Long = {
     val noise = java.lang.Math.floorMod(mix(seed ^ (patient.toLong << 32) ^ k), 26L) - 10L

@@ -578,12 +578,12 @@ class QueryPackSpec extends AnyFunSuite {
     val docs = (base ++ dupes).map { case (d, t) => (d, t.mkString(" ")) }
       .toDF("doc_id", "text")
     val sh = Text.shingleSetOf(docs).cache()
-    val plainEst = Text.plainPairEstimate(sh)
+    val plainEst = Text.pairEstimateAndCount(sh)._1
     // the guard actually fires on this corpus…
     assert(plainEst > Text.MaxCandidateAmplification * sh.count(),
       s"corpus not skewed enough to exercise the guard: $plainEst pairs")
     // …and the prefix index it routes to collapses the candidate set
-    val prefixEst = Text.plainPairEstimate(Text.prefixIndex(sh, 0.5))
+    val prefixEst = Text.pairEstimateAndCount(Text.prefixIndex(sh, 0.5))._1
     assert(prefixEst < plainEst / 4,
       s"prefix filter did not tame the blowup: $prefixEst vs $plainEst")
     // losslessness on the skewed corpus: auto output == brute-force
