@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The Hadoop conf a graft session ships with every broadcast and
   * file-sink task ([[GraftPlugin]]): no key that only the MapReduce or
-  * YARN defaults define, every other key unchanged, on every context.
+  * YARN defaults define, every other key unchanged, and no source
+  * record for a key that existed when the context started, on every
+  * context.
   */
 class HadoopConfSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
@@ -46,10 +48,43 @@ class HadoopConfSpec extends AnyFunSuite {
 
   private def keys(conf: Configuration): Set[String] = conf.iterator().asScala.map(_.getKey).toSet
 
+  /** Keys only `mapred-default.xml` or `yarn-default.xml` define in a
+    * freshly loaded conf, less those `conf` sets to a value of its own
+    * (Spark sets the committer's algorithm version). The trimmed conf
+    * keeps no source records, so they come from the fresh conf.
+    */
+  private def defaultOnly(conf: Configuration): Set[String] = {
+    val fresh = new Configuration()
+    GraftPlugin.defaultOnlyKeys(fresh).filter(k => Option(conf.getRaw(k)).forall(_ == fresh.getRaw(k))).toSet
+  }
+
   private def assertTrimmed(conf: Configuration): Unit = {
-    val left = GraftPlugin.defaultOnlyKeys(conf)
+    val left = defaultOnly(conf).filter(conf.getRaw(_) != null)
     if (left.nonEmpty) fail(s"${left.size} mapred-/yarn-default keys, e.g. ${left.take(3).mkString(", ")}")
   }
+
+  /** Keys of `conf` that still record a source. None may name a
+    * default resource: only keys set after the context started keep a
+    * record, and `setLater` must hold them all.
+    */
+  private def sourced(conf: Configuration, setLater: Set[String]): Set[String] = {
+    val fresh = new Configuration()
+    val resources = keys(fresh).flatMap(k => Option(fresh.getPropertySources(k)).toSeq.flatten)
+    assert(Set("core-default.xml", "mapred-default.xml", "yarn-default.xml").subsetOf(resources))
+    val recorded = keys(conf).filter(conf.getPropertySources(_) != null)
+    val fromResources = recorded.filter(k => conf.getPropertySources(k).exists(resources))
+    if (fromResources.nonEmpty) fail(s"${fromResources.size} keys record a default resource, e.g. " +
+      fromResources.take(3).map(k => s"$k ${conf.getPropertySources(k).mkString("[", ", ", "]")}").mkString(", "))
+    assert(recorded.subsetOf(setLater), s"set before the context started: ${(recorded -- setLater).take(3)}")
+    recorded
+  }
+
+  /** The keys set after the context started: on the context's conf by
+    * the first session's shared state, and on each copy by the session.
+    */
+  private def sessionKeys(session: SparkSession): Set[String] =
+    session.sessionState.conf.getAllConfs.keySet ++
+      sourced(session.sparkContext.hadoopConfiguration, Set("hive.metastore.warehouse.dir"))
 
   test("after a checkpointed stream, a parquet write and HdfsConfiguration, the shipped conf has no mapred-/yarn-default key") {
     import spark.implicits._
@@ -79,16 +114,19 @@ class HadoopConfSpec extends AnyFunSuite {
     val shipped = spark.sessionState.newHadoopConf()
     assertTrimmed(shipped)
     assertTrimmed(spark.sparkContext.hadoopConfiguration)
+    val recorded = sourced(shipped, sessionKeys(spark))
+    assert(recorded.size <= 30 && 10 * recorded.size < shipped.size, s"${recorded.size} of ${shipped.size} keys record a source")
     val (size, full) = (bytes(shipped), untrimmed(shipped))
-    info(s"shipped conf: ${shipped.size} keys, $size bytes; untrimmed: ${full.size} keys, ${bytes(full)} bytes")
-    assert(size <= 48 * 1024, s"shipped conf is $size bytes")
-    assert(bytes(full) > 2 * size)
+    info(s"shipped conf: ${shipped.size} keys, ${recorded.size} with a source, $size bytes; " +
+      s"untrimmed: ${full.size} keys, ${bytes(full)} bytes")
+    assert(size <= 26 * 1024, s"shipped conf is $size bytes")
+    assert(bytes(full) > 4 * size)
   }
 
   test("the trim drops only mapred-/yarn-default keys: every other key, committer read and _SUCCESS unchanged") {
     val trimmed = spark.sessionState.newHadoopConf()
     val full = untrimmed(trimmed)
-    val dropped = GraftPlugin.defaultOnlyKeys(full).toSet
+    val dropped = defaultOnly(full)
     assert(dropped.size > 700)
     assert(keys(trimmed) == keys(full) -- dropped, s"${keys(full).size - keys(trimmed).size} keys dropped, ${dropped.size} expected")
     for (k <- keys(trimmed)) assert(trimmed.getRaw(k) == full.getRaw(k), k)
@@ -148,6 +186,7 @@ class HadoopConfSpec extends AnyFunSuite {
     assert(restarted.sparkContext ne first)
     assertTrimmed(restarted.sparkContext.hadoopConfiguration)
     assertTrimmed(restarted.sessionState.newHadoopConf())
+    sourced(restarted.sessionState.newHadoopConf(), sessionKeys(restarted))
 
     // a new session over the running context builds its shared state anew
     SparkSession.clearActiveSession()
@@ -155,6 +194,7 @@ class HadoopConfSpec extends AnyFunSuite {
     val again = GraftSession.builder("local[2]", 2).getOrCreate()
     assert((again ne restarted) && (again.sparkContext eq restarted.sparkContext))
     assertTrimmed(again.sessionState.newHadoopConf())
+    sourced(again.sessionState.newHadoopConf(), sessionKeys(again))
     assert(again.range(10).count() == 10)
   }
 }
