@@ -3,116 +3,87 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** The library's one materialization point for fan-out intermediates
-  * (a frame about to be consumed by several downstream plans — dedup
-  * membership tables, shingle sets, scored corpora). Every operator
-  * that used to call `localCheckpoint(true)` inline routes through
-  * [[Materialize.eager]], so the STRATEGY is a session-level choice
-  * instead of a hard-coded failure-semantics decision:
+/** The library's one materialization point: fan-out intermediates (a
+  * frame about to be consumed by several downstream plans — dedup
+  * membership tables, shingle sets, scored corpora) go through
+  * [[Materialize.eager]], and the per-round states of driver loops
+  * (pagerank, k_core, label propagation, Lloyd, BPE/unigram training,
+  * SCD2 advance) go through [[Materialize.round]]. Both read ONE
+  * session setting, so what survives a lost executor is one choice:
   *
-  *   spark.graft.materialize = localCheckpoint (default) | cache | checkpoint
+  *   spark.graft.materialize = localCheckpoint (default) | checkpoint
   *
-  * - `localCheckpoint` — eager local checkpoint: blocks free with the
-  *   RDD (no session CacheManager pin — the cache-hygiene contract,
-  *   CacheHygieneSpec), lineage truncated, fastest. CLUSTER CAVEAT
-  *   (the round-6 advisory): local-checkpoint blocks are
-  *   non-replicated and the truncated lineage cannot recompute them —
-  *   an executor loss (or a dynamic-allocation decommission, which
-  *   the Spark docs explicitly warn against combining with local
-  *   checkpoints) fails every downstream stage unrecoverably. The
-  *   right default for a single-app analytics run (this bench, a
-  *   dedicated batch job), the wrong one for long-lived clusters
-  *   with dynamic allocation.
-  * - `cache` — persist(MEMORY_AND_DISK) + an eager count: keeps full
-  *   lineage, so a lost executor transparently recomputes — at the
-  *   cost of CacheManager-pinned entries (callers' unpersist() calls
-  *   still release loop intermediates) and re-derivation work on
-  *   failure. Set this on clusters with dynamic allocation.
-  * - `checkpoint` — reliable checkpoint to the SparkContext
-  *   checkpoint dir (caller must have set one): survives executor
-  *   loss WITHOUT lineage recompute — the strongest (and slowest)
-  *   option, for expensive intermediates on flaky fleets.
+  * - `localCheckpoint` — blocks live on the executors that computed
+  *   them, non-replicated, and the truncated lineage cannot recompute
+  *   them: the fastest form, and no session CacheManager pin (the
+  *   cache-hygiene contract, CacheHygieneSpec). An executor loss (or a
+  *   dynamic-allocation decommission, which the Spark docs warn
+  *   against combining with local checkpoints) FAILS the query with
+  *   `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`; nothing restarts the
+  *   operator. Right for a dedicated batch run, wrong for clusters
+  *   with dynamic allocation or preemptible executors.
+  * - `checkpoint` — every materialization lands in the RELIABLE
+  *   checkpoint dir (the caller must have called
+  *   `sc.setCheckpointDir`): a lost executor's blocks are re-read from
+  *   the files, nothing is recomputed. One filesystem write per
+  *   materialization, always eager — lazy `rdd.checkpoint()` marks are
+  *   only finalized for a job's TOP RDD (doCheckpoint does not recurse
+  *   to marked ancestors unless
+  *   `spark.checkpoint.checkpointAllMarkedAncestors` is set at context
+  *   start), so a lazily-marked round would never reach the dir. The
+  *   transient persist around the write keeps the plan from computing
+  *   twice (once for the eager action, once inside the checkpoint-file
+  *   writer).
   *
-  * All three preserve the child plan's output partitioning
-  * (LogicalRDD carries it for both checkpoint flavors;
-  * InMemoryTableScan reports it because the session pins
-  * `canChangeCachedPlanOutputPartitioning=false`), so co-partitioned
-  * join plans downstream are strategy-independent — results are
-  * bit-identical under every strategy, only failure semantics and
-  * memory accounting move.
+  * Any other value is an error: a typo must not silently select the
+  * least recoverable form. BlockLossSpec unpersists every block after
+  * pagerank, k_core, dedup_clusters and graph_communities return and
+  * shows the two values behaving differently; TaskFailureSpec shows
+  * both surviving a failed scan task.
   *
-  * The lazy per-round checkpoints inside driver loops (pagerank, BPE
-  * training, label propagation) are a SEPARATE knob: they exist to
-  * truncate lineage that would otherwise nest per round, so `cache`
-  * cannot replace them — they route through [[round]] and its
-  * `spark.graft.loopMaterialize` config (see [[round]]'s scaladoc
-  * for the loop recovery contract).
+  * Both forms replace the logical plan with a LogicalRDD (lineage must
+  * not nest round-over-round — the r4 exponential-plan failure) and
+  * preserve the child plan's output partitioning, so co-partitioned
+  * join plans downstream are strategy-independent and results are
+  * bit-identical under both (LoopStrategySpec, CacheHygieneSpec).
   */
 object Materialize {
 
   val StrategyKey = "spark.graft.materialize"
 
-  /** Eagerly materialize a multiply-consumed intermediate under the
-    * session's configured strategy (see object doc). Eager on
-    * purpose: the consumers are typically parallel stages of one
-    * job, and a lazy shared frame gets recomputed per consumer (the
-    * r5 self-union double-evaluation failure). Note the library-API
-    * consequence: calling an operator that materializes runs Spark
-    * jobs at DataFrame CONSTRUCTION time (documented per operator).
-    */
-  def eager(df: DataFrame): DataFrame =
+  private def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption(StrategyKey).getOrElse("localCheckpoint") match {
-      case "cache" =>
-        val c = df.persist(StorageLevel.MEMORY_AND_DISK)
-        c.count()
-        c
-      case "checkpoint" => df.checkpoint(eager = true)
-      case _ => df.localCheckpoint(eager = true)
+      case "localCheckpoint" => false
+      case "checkpoint" => true
+      case other => throw new IllegalArgumentException(
+        s"$StrategyKey = '$other': expected localCheckpoint or checkpoint")
     }
 
-  /** Per-round lineage truncation for DRIVER LOOPS (pagerank, k_core,
-    * label propagation, star contraction, Lloyd, BPE/unigram
-    * training, SCD2 advance): every loop that used to call
-    * `localCheckpoint` inline per round routes through here, so loop
-    * FAILURE SEMANTICS are one session-level choice:
+  private def checkpointed(df: DataFrame): DataFrame = {
+    val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try persisted.checkpoint(eager = true)
+    finally persisted.unpersist()
+  }
+
+  /** Eagerly materialize a multiply-consumed intermediate (see object
+    * doc). Eager on purpose: the consumers are typically parallel
+    * stages of one job, and a lazy shared frame gets recomputed per
+    * consumer (the r5 self-union double-evaluation failure). Note the
+    * library-API consequence: calling an operator that materializes
+    * runs Spark jobs at DataFrame CONSTRUCTION time (documented per
+    * operator).
+    */
+  def eager(df: DataFrame): DataFrame =
+    if (reliable(df)) checkpointed(df) else df.localCheckpoint(eager = true)
+
+  /** Per-round lineage truncation for DRIVER LOOPS. Under the default
+    * the local checkpoint is LAZY: rounds materialize inside the NEXT
+    * action's job (the bpe_train lesson) instead of one eager job per
+    * round. Under `checkpoint` it is the same eager reliable write as
+    * [[eager]].
     *
-    *   spark.graft.loopMaterialize = localCheckpoint (default) | checkpoint
-    *
-    * - `localCheckpoint` — per-round blocks are LOCAL and
-    *   non-replicated: the fastest truncation, and the right default
-    *   for a dedicated batch run, but a mid-loop executor loss (or
-    *   dynamic-allocation decommission) cannot recompute a lost
-    *   round — the whole OPERATOR restarts. That is the documented
-    *   recovery contract of the default.
-    * - `checkpoint` — per-round state lands in the RELIABLE
-    *   checkpoint dir (caller must have called
-    *   `sc.setCheckpointDir`): an executor loss mid-loop recomputes
-    *   nothing — the next round re-reads the surviving round files —
-    *   which is what a 100 TB, multi-hour loop on a shared fleet
-    *   wants. Costs one filesystem write per round, plus the
-    *   standard lazy-checkpoint caveat that the round's plan runs
-    *   once more at write time unless already persisted.
-    *
-    * Both forms replace the logical plan with a LogicalRDD
-    * immediately (lineage must not nest round-over-round — the r4
-    * exponential-plan failure) and both preserve the child's output
-    * partitioning, so per-round join plans are strategy-independent
-    * and results are bit-identical (LoopStrategySpec pins this).
-    * `eager` applies to the default branch only, and defaults false:
-    * rounds materialize inside the NEXT action's job (the bpe_train
-    * lesson) instead of one eager job per round. The reliable branch
-    * is ALWAYS eager — lazy `rdd.checkpoint()` marks are only
-    * finalized for a job's TOP RdD (doCheckpoint does not recurse to
-    * marked ancestors unless `spark.checkpoint.checkpointAllMarkedAncestors`
-    * is set at context start), so a lazily-marked round would never
-    * reach the checkpoint dir — and a write that happens after the
-    * loop ends would provide no mid-loop recovery anyway. The
-    * transient persist around the write is the standard move that
-    * keeps the round's plan from computing twice (once for the
-    * eager action, once inside the checkpoint-file writer).
-    *
-    * `serialized` stores the round's blocks as raw UnsafeRow bytes
-    * (MEMORY_AND_DISK_SER) instead of row objects: the measured
+    * `serialized` stores a default round's blocks as raw UnsafeRow
+    * bytes (MEMORY_AND_DISK_SER) instead of row objects: the measured
     * footprint HALVES — 42.2 vs 84.0 B/node for pagerank's (id, pr)
     * state at sf0.1 (PagerankStorageSpec prints all three shapes) —
     * because serialized storage drops the per-object JVM overhead,
@@ -126,21 +97,12 @@ object Materialize {
     * min 2.6 → 3.5 s at sf0.1 under blanket SER, which is why this
     * is a parameter and not the default).
     */
-  val LoopStrategyKey = "spark.graft.loopMaterialize"
-
-  def round(df: DataFrame, eager: Boolean = false,
-      serialized: Boolean = false): DataFrame =
-    df.sparkSession.conf.getOption(LoopStrategyKey).getOrElse("localCheckpoint") match {
-      case "checkpoint" =>
-        val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
-        try persisted.checkpoint(eager = true)
-        finally persisted.unpersist()
-      case _ =>
-        if (serialized)
-          df.localCheckpoint(eager = eager,
-            storageLevel = StorageLevel.MEMORY_AND_DISK_SER)
-        else df.localCheckpoint(eager = eager)
-    }
+  def round(df: DataFrame, serialized: Boolean = false): DataFrame =
+    if (reliable(df)) checkpointed(df)
+    else if (serialized)
+      df.localCheckpoint(eager = false,
+        storageLevel = StorageLevel.MEMORY_AND_DISK_SER)
+    else df.localCheckpoint(eager = false)
 
   /** Defensive variant for operators whose CONTRACT says "pass a
     * materialized frame" (ngramJaccardOn): a frame that is already a
@@ -157,22 +119,21 @@ object Materialize {
     if (settled) df else eager(df)
   }
 
-  /** Release a DEAD materialized frame's storage NOW, under every
-    * strategy. `Dataset.unpersist()` only removes CacheManager
-    * entries (the `cache` strategy); a checkpoint-strategy frame's
-    * blocks live on its underlying LogicalRDD, which
-    * Dataset.unpersist never touches — they linger until the async
-    * ContextCleaner collects the RDD, which is exactly the retention
-    * the r9 driver bench measured as pagerank runs growing 10.0 →
-    * 14.9 s inside one JVM. Callers must guarantee the frame is dead:
-    * a local-checkpoint RDD cannot be recomputed after unpersisting
-    * (truncated lineage), so releasing a frame something still reads
-    * is a downstream job failure, not a slowdown.
+  /** Release a DEAD materialized frame's storage NOW. A checkpoint
+    * product's blocks live on its underlying LogicalRDD, which
+    * `Dataset.unpersist` never touches (it only removes CacheManager
+    * entries) — they linger until the async ContextCleaner collects
+    * the RDD, which is exactly the retention the r9 driver bench
+    * measured as pagerank runs growing 10.0 → 14.9 s inside one JVM.
+    * Callers must guarantee the frame is dead: a local-checkpoint RDD
+    * cannot be recomputed after unpersisting (truncated lineage), so
+    * releasing a frame something still reads is a downstream job
+    * failure, not a slowdown.
     *
     * Scope (the r10 advisory): this unpersists the frame's OWN
     * storage only — the CacheManager entry plus the RDD when the
     * analyzed plan IS a checkpoint root (the shape every
-    * [[eager]]/localCheckpoint product has). It deliberately does NOT
+    * [[eager]]/[[round]] product has). It deliberately does NOT
     * sweep LogicalRDDs buried deeper in a derived plan: a lazy frame
     * built over another materialized frame must never truncate that
     * frame's blocks out from under its other consumers — later reads

@@ -53,8 +53,8 @@ object Dedup {
     * frames are garbage, so repeated dedup-family calls from a
     * long-lived application leave no net cache growth (asserted in
     * DupSkewSpec); clusters running dynamic allocation should set
-    * `spark.graft.materialize=cache` — see [[graft.Materialize]] for
-    * the failure-semantics trade.
+    * `spark.graft.materialize=checkpoint` with a checkpoint dir — see
+    * [[graft.Materialize]] for the failure semantics.
     */
   private[graft] def collapseByText(docs: DataFrame): (DataFrame, DataFrame) = {
     val keyed = docs.select(col("doc_id"), col("text"))
@@ -372,7 +372,7 @@ object Dedup {
       var converged = false
       var it = 0
       while (!converged && it < maxIters) {
-        val next = graft.Materialize.round(starRound(edges), eager = true)
+        val next = graft.Materialize.eager(starRound(edges))
         val nfp = fingerprint(next)
         graft.Materialize.release(edges)
         edges = next

@@ -149,9 +149,10 @@ object Graph {
     // partitioning flows through, and round 1 is its only consumer,
     // so it needs no storage of its own
     var pr = base.select(col("id"), lit(PrScale).as("pr"))
-    // checkpoint EVERY round — but LAZILY (the bpe_train lesson), with
-    // only the final round eager (strategy-gated: under the
-    // `checkpoint` strategy the final state lands reliably). Lazy
+    // checkpoint EVERY round — under the default LAZILY (the bpe_train
+    // lesson), with only the final round eager; under
+    // `spark.graft.materialize=checkpoint` every round is an eager
+    // reliable write (see Materialize.round). Lazy
     // Materialize.round still replaces the logical plan with a
     // LogicalRDD immediately (lineage cannot nest round-over-round —
     // the r4 exponential-plan failure) and still preserves the

@@ -41,44 +41,17 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
   }
 
-  /** The r6 advisory's gate: materialization strategy is a session
-    * setting ([[Materialize]]), so cluster deployments with dynamic
-    * allocation can trade the default local-checkpoint throughput
-    * for recompute-on-executor-loss (`cache`) or reliable blocks
-    * (`checkpoint`) — with bit-identical results.
+  /** The materialization key ([[Materialize]]) trades the default
+    * local-checkpoint throughput for reliable checkpoint files that
+    * survive executor loss — with bit-identical results.
     */
-  test("materialize strategy `cache`: identical results, lineage kept (pins expected)") {
-    spark.catalog.clearCache()
-    val expect = operators.Graph.pagerank(spark, sf).collect().toSeq
-    spark.conf.set(Materialize.StrategyKey, "cache")
-    try {
-      val frame = operators.Graph.pagerank(spark, sf)
-      assert(frame.collect().toSeq == expect)
-      // the documented trade: intermediates now live in the
-      // CacheManager (recoverable lineage) instead of checkpoint
-      // blocks — so pins while frames are live are EXPECTED
-      assert(!spark.sharedState.cacheManager.isEmpty,
-        "cache strategy should persist through the CacheManager")
-    } finally {
-      spark.conf.unset(Materialize.StrategyKey)
-      spark.catalog.clearCache()
-    }
-    assert(spark.sharedState.cacheManager.isEmpty)
-  }
-
   test("materialize strategy `checkpoint`: identical results, no CacheManager pins") {
     spark.catalog.clearCache()
     val expect = operators.Graph.pagerank(spark, sf).collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(Materialize.StrategyKey, "checkpoint")
-    try {
+    try WithStrategy(spark, "checkpoint") {
       assert(operators.Graph.pagerank(spark, sf).collect().toSeq == expect)
       assert(spark.sharedState.cacheManager.isEmpty,
         "reliable checkpoints must not pin the CacheManager")
-    } finally {
-      spark.conf.unset(Materialize.StrategyKey)
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 }

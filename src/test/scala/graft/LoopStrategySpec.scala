@@ -3,45 +3,28 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The loop fault-tolerance knob (r11 verdict #6):
-  * `spark.graft.loopMaterialize` switches every driver loop's
-  * per-round lineage truncation between the default local checkpoint
-  * (fast, non-replicated — a mid-loop executor loss restarts the
-  * operator) and RELIABLE per-round checkpoints to the SparkContext
-  * checkpoint dir (an executor loss mid-loop recovers from the round
-  * files — what a multi-hour 100 TB loop on a shared fleet wants).
-  * Results must be bit-identical under both; only failure semantics
-  * move. Pinned here on the two heaviest loop operators (pagerank's
-  * rank rounds, k_core's shrinking edge rounds) plus the
-  * star-contraction loop dedup_clusters drives.
+/** The materialization key in driver loops:
+  * `spark.graft.materialize` switches every loop's per-round lineage
+  * truncation between the default local checkpoint (fast,
+  * non-replicated — a mid-loop executor loss fails the query) and
+  * RELIABLE per-round checkpoints to the SparkContext checkpoint dir
+  * (an executor loss mid-loop recovers from the round files — what a
+  * multi-hour 100 TB loop on a shared fleet wants). Results must be
+  * bit-identical under both; only failure semantics move. Pinned here
+  * on the two heaviest loop operators (pagerank's rank rounds, k_core's
+  * shrinking edge rounds) plus the star-contraction loop
+  * dedup_clusters drives.
   */
 class LoopStrategySpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   val sf = "/root/testdata/sf0.001"
-
-  private def withReliable[T](body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-loop-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(Materialize.LoopStrategyKey, "checkpoint")
-    try body
-    finally {
-      spark.conf.unset(Materialize.LoopStrategyKey)
-      // release round files with the run (the spec contract: a REAL
-      // deployment keeps them for recovery; tests must not accumulate)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir.toFile)
-    }
-  }
 
   private def sorted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   test("pagerank is bit-identical under reliable per-round checkpoints, and round files land") {
     val default = sorted(operators.Graph.pagerank(spark, sf))
-    val (reliable, files) = withReliable {
+    val (reliable, files) = WithStrategy(spark, "checkpoint") {
       val out = sorted(operators.Graph.pagerank(spark, sf))
       val raw = spark.sparkContext.getCheckpointDir.get
       val dir = if (raw.contains(":")) new java.io.File(new java.net.URI(raw))
@@ -57,11 +40,24 @@ class LoopStrategySpec extends AnyFunSuite {
   test("k_core and dedup_clusters are bit-identical under reliable per-round checkpoints") {
     val kDefault = sorted(operators.Graph.kCore(spark, sf))
     val cDefault = sorted(SparkEntry.queries("dedup_clusters")(spark, sf))
-    withReliable {
+    WithStrategy(spark, "checkpoint") {
       assert(sorted(operators.Graph.kCore(spark, sf)) == kDefault,
         "loop strategy changed k_core's results")
       assert(sorted(SparkEntry.queries("dedup_clusters")(spark, sf)) == cDefault,
         "loop strategy changed dedup_clusters' results")
     }
+  }
+
+  test("an unknown strategy, such as the removed `cache`, fails loudly") {
+    val df = spark.range(3).toDF("v")
+    spark.conf.set(Materialize.StrategyKey, "cache")
+    try {
+      for (materialize <- Seq[org.apache.spark.sql.DataFrame => Any](
+          Materialize.eager, Materialize.round(_), Materialize.ensure)) {
+        val e = intercept[IllegalArgumentException](materialize(df))
+        Seq(Materialize.StrategyKey, "cache", "localCheckpoint", "checkpoint")
+          .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+      }
+    } finally spark.conf.unset(Materialize.StrategyKey)
   }
 }

@@ -70,8 +70,9 @@ class PagerankStorageSpec extends AnyFunSuite {
       (bytes, n)
     }
 
-    // the shipped round output: (id, pr), serialized blocks (the
-    // Materialize.round default since r12 — see its scaladoc)
+    // the round's (id, pr) output at localCheckpoint's default storage
+    // level (deserialized rows); the serialized form pagerank's rounds
+    // use (Materialize.round(serialized = true)) is measured below
     val round = operators.Graph.pagerankRound(edges, base, pr0)
     val (narrowBytes, n) = checkpointedBytes(round)
     // the pre-r12 state shape on the same rows: (id, outdeg, pr)
