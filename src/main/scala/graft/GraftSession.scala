@@ -43,6 +43,11 @@ import org.apache.spark.sql.SparkSession
   * graft session `getPropertySources(k)` therefore returns null for
   * every key that existed when the context started; only diagnostics
   * read it.
+  *
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` lets the
+  * ContextCleaner delete a dead round's reliable checkpoint files
+  * ([[Materialize]] under `checkpoint`), which otherwise stay for the
+  * life of the app: 12 RDD dirs after one sf0.001 pagerank, 24 after two.
   */
 object GraftSession {
   def builder(master: String = "local[*]", cores: Int = 32): SparkSession.Builder =
@@ -81,6 +86,7 @@ object GraftSession {
       // ships the Hadoop conf without the MapReduce/YARN defaults and
       // without per-key source records (above)
       .config("spark.plugins", classOf[GraftPlugin].getName)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

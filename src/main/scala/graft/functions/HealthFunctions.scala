@@ -26,6 +26,19 @@ object HealthFunctions {
     StructField("timestamp", StringType),
     StructField("heart_rate_bpm", LongType)))
 
+  /** The reference's alert record (src/flink_job.py:113-122), window
+    * bounds in epoch millis: [[graft.streaming.HealthMonitor.alertJson]]
+    * renders it and [[graft.sources.AlertStore.readJson]] reads it.
+    */
+  val alertSchema: StructType = StructType(Seq(
+    StructField("patient_id", StringType),
+    StructField("window_start", LongType),
+    StructField("window_end", LongType),
+    StructField("avg_hr", DoubleType),
+    StructField("min_hr", LongType),
+    StructField("max_hr", LongType),
+    StructField("alert_type", StringType)))
+
   /** The reference producer's Kafka payload (src/kafka_producer.py:
     * 23-27): `to_json` of the [[eventSchema]] fields, the timestamp
     * rendered ISO-8601 with milliseconds and offset.

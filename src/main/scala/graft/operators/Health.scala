@@ -69,8 +69,9 @@ object Health {
   /** hr_window_tumbling — the reference's core operator: event-time
     * tumbling window (1 h here; 1 min in the reference — same
     * machinery) per patient with avg/min/max/count and the window
-    * classification, emitting the alert record shape of
-    * src/flink_job.py:113-122. One shuffle on (user, window). The
+    * classification: the alert record of src/flink_job.py:113-122
+    * keyed on `user_id`, with `_ms` bounds and `n_readings`. One
+    * shuffle on (user, window). The
     * composed cards (hr_episodes, hr_alert_stats) consume the
     * unordered rows; only the registered query sorts.
     */
@@ -148,12 +149,13 @@ object Health {
   }
 
   /** hr_alert_stats — the reference's Spark batch analysis
-    * (src/spark_batch_analysis.py:22-26): alerts grouped by
-    * patient × alert_type with counts.
+    * (src/spark_batch_analysis.py:22-26): the stream's alert-file
+    * rollup [[graft.sources.AlertStore.analyze]] over the
+    * [[hrWindowTumbling]] rows, keyed on `user_id`.
     */
   def hrAlertStats(spark: SparkSession, dir: String): DataFrame =
     hrAlertStatsOn(Tables(spark, dir).events)
 
   private[graft] def hrAlertStatsOn(ev: DataFrame): DataFrame =
-    graft.sources.AlertStore.analyze(hrWindowTumblingOn(ev))
+    graft.sources.AlertStore.analyze(hrWindowTumblingOn(ev), "user_id")
 }

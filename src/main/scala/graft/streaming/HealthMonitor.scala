@@ -4,6 +4,7 @@ import graft.functions.HealthFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.sql.Row
 
 /** The reference streaming job (/root/reference/src/flink_job.py)
@@ -114,15 +115,15 @@ object HealthMonitor {
         window_time(col("w")).as("window_time"))
 
   /** Alert rows → the reference's JSON alert payload
-    * (flink_job.py:113-122).
+    * (flink_job.py:113-122): the [[alertSchema]] fields in order, the
+    * window timestamps as epoch millis.
     */
   def alertJson(alerts: DataFrame): DataFrame =
-    alerts.select(to_json(struct(
-      col("patient_id"),
-      unix_millis(col("window_start")).as("window_start"),
-      unix_millis(col("window_end")).as("window_end"),
-      col("avg_hr"), col("min_hr"), col("max_hr"),
-      col("alert_type"))).as("value"))
+    alerts.select(to_json(struct(alertSchema.fields.toSeq.map { f =>
+      val c = col(f.name)
+      (if (alerts.schema(f.name).dataType == TimestampType) unix_millis(c)
+       else c.cast(f.dataType)).as(f.name)
+    }: _*)).as("value"))
 
   /** The reference producer's sink options (flink_job.py:131-143):
     * alert topic plus the checkpoint dir that makes delivery

@@ -22,16 +22,18 @@ class LoopStrategySpec extends AnyFunSuite {
   private def sorted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
+  private def checkpointDir(): java.io.File = {
+    val raw = spark.sparkContext.getCheckpointDir.get
+    if (raw.contains(":")) new java.io.File(new java.net.URI(raw)) else new java.io.File(raw)
+  }
+
   test("pagerank is bit-identical under reliable per-round checkpoints, and round files land") {
     val default = sorted(operators.Graph.pagerank(spark, sf))
     val (reliable, files) = WithStrategy(spark, "checkpoint") {
       val out = sorted(operators.Graph.pagerank(spark, sf))
-      val raw = spark.sparkContext.getCheckpointDir.get
-      val dir = if (raw.contains(":")) new java.io.File(new java.net.URI(raw))
-                else new java.io.File(raw)
       def count(f: java.io.File): Int =
         if (f.isDirectory) f.listFiles().map(count).sum else 1
-      (out, count(dir))
+      (out, count(checkpointDir()))
     }
     assert(reliable == default, "loop strategy changed pagerank's results")
     assert(files > 0, "reliable strategy wrote no per-round checkpoint files")
@@ -45,6 +47,28 @@ class LoopStrategySpec extends AnyFunSuite {
         "loop strategy changed k_core's results")
       assert(sorted(SparkEntry.queries("dedup_clusters")(spark, sf)) == cDefault,
         "loop strategy changed dedup_clusters' results")
+    }
+  }
+
+  test("dead rounds' checkpoint files are deleted: a second pagerank leaves no more RDD dirs") {
+    WithStrategy(spark, "checkpoint") {
+      def rddDirs(): Int = checkpointDir().listFiles().count(_.getName.startsWith("rdd-"))
+      def runAndCollect(): Int = {
+        sorted(operators.Graph.pagerank(spark, sf))
+        CacheLedger.drain(spark)
+        System.gc()
+        rddDirs()
+      }
+      val first = runAndCollect()
+      var second = runAndCollect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (second > first && System.nanoTime() < deadline) {
+        Thread.sleep(250)
+        System.gc()
+        second = rddDirs()
+      }
+      info(s"RDD checkpoint dirs: $first after one pagerank, $second after two")
+      assert(second <= first, s"$first RDD dirs after one pagerank, $second after two")
     }
   }
 

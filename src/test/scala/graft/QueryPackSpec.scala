@@ -809,24 +809,6 @@ class QueryPackSpec extends AnyFunSuite {
     assert(salted.map(_.toSeq).toSeq == plain.map(_.toSeq).toSeq)
   }
 
-  test("alert store: JSON/CSV round-trip preserves the batch analysis result") {
-    import graft.sources.AlertStore
-    val alerts = SparkEntry.queries("hr_window_tumbling")(spark, sf)
-    val expected = AlertStore.analyze(alerts).collect().map(_.toSeq).toSeq
-    val base = "target/tmp/alertstore"
-    AlertStore.writeJson(alerts, s"$base/json")
-    AlertStore.writeCsv(alerts, s"$base/csv")
-    val fromJson = AlertStore.analyze(AlertStore.readJson(spark, s"$base/json"))
-      .collect().map(_.toSeq).toSeq
-    val fromCsv = AlertStore.analyze(AlertStore.readCsv(spark, s"$base/csv"))
-      .collect().map(_.toSeq).toSeq
-    assert(fromJson == expected)
-    assert(fromCsv == expected)
-    // and it matches the registered hr_alert_stats operator
-    val stats = SparkEntry.queries("hr_alert_stats")(spark, sf).collect().map(_.toSeq).toSeq
-    assert(fromJson == stats)
-  }
-
   test("hr_episodes equals the batch EpisodeTracker's episodes") {
     import spark.implicits._
     import graft.streaming._

@@ -75,13 +75,23 @@ class StreamingSpec extends AnyFunSuite {
     val json = HealthMonitor.alertJson(HealthMonitor.alerts(input.toDF().toDF("value")))
     val q = HealthMonitor.memorySink(json, "alerts_t3", "update")
     try {
-      input.addData(ev("p9", "2025-01-01T10:00:05+00:00", 110))
+      input.addData(
+        ev("p9", "2025-01-01T10:00:05+00:00", 110),
+        ev("p8", "2025-01-01T10:00:15+00:00", 40),
+        ev("p8", "2025-01-01T10:00:25+00:00", 60))
       q.processAllAvailable()
-      val s = spark.table("alerts_t3").as[String].collect().head
-      for (f <- Seq("patient_id", "window_start", "window_end", "avg_hr", "min_hr",
-          "max_hr", "alert_type"))
-        assert(s.contains(s""""$f""""), s"missing $f in $s")
-      assert(s.contains(""""alert_type":"tachycardia""""))
+      val schema = graft.functions.HealthFunctions.alertSchema
+      val lines = spark.table("alerts_t3")
+      assert(lines.count() == 2)
+      val parsed = lines.select(from_json(col("value"), schema).as("a")).select("a.*")
+      assert(parsed.columns.toSeq == schema.fieldNames.toSeq)
+      for (r <- parsed.collect(); i <- 0 until r.length)
+        assert(!r.isNullAt(i), s"${parsed.columns(i)} is NULL in $r")
+      assert(lines.as[String].collect().toSet == Set(
+        """{"patient_id":"p9","window_start":1735725600000,"window_end":1735725660000,""" +
+          """"avg_hr":110.0,"min_hr":110,"max_hr":110,"alert_type":"tachycardia"}""",
+        """{"patient_id":"p8","window_start":1735725600000,"window_end":1735725660000,""" +
+          """"avg_hr":50.0,"min_hr":40,"max_hr":60,"alert_type":"normal"}"""))
     } finally q.stop()
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.io.IOException
 import java.net.URI
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.TaskContext
@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `faulty:` — the local file system, except that once [[FaultyFs.armed]]
-  * the first open of a `lineitem` file by attempt 0 of a task throws.
+/** `faulty:` — the local file system, except that once
+  * [[FaultyFs.armed]] holds a table name, the first open of that
+  * table's file by attempt 0 of a task throws.
   */
 class FaultyFs extends NioRawLocalFileSystem {
   override def getUri: URI = FaultyFs.Uri
@@ -19,8 +20,9 @@ class FaultyFs extends NioRawLocalFileSystem {
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val task = TaskContext.get()
-    if (task != null && task.attemptNumber() == 0 && f.getName.startsWith("lineitem") &&
-        FaultyFs.armed.compareAndSet(true, false))
+    val table = FaultyFs.armed.get
+    if (task != null && task.attemptNumber() == 0 && table != null &&
+        f.getName.startsWith(table) && FaultyFs.armed.compareAndSet(table, null))
       throw new IOException(s"injected fault: attempt 0 of task ${task.taskAttemptId()} opening $f")
     super.open(f, bufferSize)
   }
@@ -28,7 +30,8 @@ class FaultyFs extends NioRawLocalFileSystem {
 
 object FaultyFs {
   val Uri: URI = URI.create("faulty:///")
-  val armed = new AtomicBoolean(false)
+  /** The table whose next scan fails, or null. */
+  val armed = new AtomicReference[String]()
 }
 
 /** Task failure: one scan task's first attempt fails, and Spark's
@@ -53,13 +56,14 @@ class TaskFailureSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
-  for (name <- Seq("pagerank", "k_core"))
+  for ((name, table) <- Seq("pagerank" -> "lineitem", "k_core" -> "lineitem",
+      "dedup_clusters" -> "documents", "graph_communities" -> "lineitem"))
     test(s"$name: a failed scan task is retried to the clean rows under both strategies") {
       val clean = rows(SparkEntry.queries(name)(spark, sf))
       for (strategy <- Seq("localCheckpoint", "checkpoint")) {
-        FaultyFs.armed.set(true)
+        FaultyFs.armed.set(table)
         val got = WithStrategy(spark, strategy)(rows(SparkEntry.queries(name)(spark, s"faulty://$sf")))
-        assert(!FaultyFs.armed.getAndSet(false), s"$strategy: no scan task failed")
+        assert(FaultyFs.armed.getAndSet(null) == null, s"$strategy: no $table scan task failed")
         assert(got == clean, s"$strategy: the retried run returned other rows")
       }
     }
