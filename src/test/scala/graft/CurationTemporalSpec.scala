@@ -113,7 +113,7 @@ class CurationTemporalSpec extends AnyFunSuite {
     val out = Curation.seqPack(spark, sf)
     // the distributed plan must not serialize: no global-window
     // single-partition exchange anywhere in the physical plan
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = WithRangeSort(spark)(out.queryExecution.executedPlan.toString)
     assert(!plan.contains("SinglePartition"), "seq_pack plan has a single-partition exchange")
     // bit-identical to the serial reference: global running sum
     // computed on the driver over the collected chunks

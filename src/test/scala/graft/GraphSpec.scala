@@ -18,6 +18,8 @@ class GraphSpec extends AnyFunSuite {
   private val ClusterStatsJobs = 36
   private val CommunityStatsJobs = 21
   private val GraphCommunitiesJobs = 16
+  private val HrEpisodesJobs = 5
+  private val QualityScoreJobs = 3
 
   /** Plain-Scala reference: same integer arithmetic, same rounds. */
   private def referencePr(nodes: Seq[Long], edges: Seq[(Long, Long)])
@@ -326,31 +328,17 @@ class GraphSpec extends AnyFunSuite {
     // Spark jobs of ONE cold call each. A second LPA loop inside
     // community_stats (≥ 3 cycle actions + the init count at
     // sf0.001), a re-run contraction loop or a new sampling job
-    // breaks the budget.
+    // breaks the budget (hr_episodes and quality_score sort their
+    // output in one partition, with no range-bounds sampling job).
     val budgets = Seq(
       "cluster_stats" -> ClusterStatsJobs,
       "community_stats" -> CommunityStatsJobs,
-      "graph_communities" -> GraphCommunitiesJobs)
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def settled(): Int = {
-      // listener delivery is async: drain the bus deterministically
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-      counter.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val jobs = try budgets.map { case (name, _) =>
-      CacheLedger.drain(spark)
-      val before = settled()
-      SparkEntry.queries(name)(spark, sf).collect()
-      name -> (settled() - before)
+      "graph_communities" -> GraphCommunitiesJobs,
+      "hr_episodes" -> HrEpisodesJobs,
+      "quality_score" -> QualityScoreJobs)
+    val jobs = budgets.map { case (name, _) =>
+      name -> ColdJobs(spark)(SparkEntry.queries(name)(spark, sf).collect())
     }.toMap
-    finally spark.sparkContext.removeSparkListener(listener)
     info(s"cold jobs: $jobs")
     budgets.foreach { case (name, budget) =>
       assert(jobs(name) <= budget,

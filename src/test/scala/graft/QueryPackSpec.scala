@@ -124,13 +124,40 @@ class QueryPackSpec extends AnyFunSuite {
           !parent.isInstanceOf[GlobalLimit] => true
       case c => sortBelow(c)
     }
+    // the sweep plans with SmallSort excluded (WithRangeSort), as for
+    // inputs above its bounds. At the default conf SmallSort may sort
+    // a root global Sort in one partition: every single-partition
+    // exchange the default plan adds must sit directly under it
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    def singlePartition(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+      case _ => false
+    }
     val interiorSorted = Seq.newBuilder[String]
     for ((name, fn) <- SparkEntry.queries) {
       spark.catalog.clearCache()
-      val df = fn(spark, sf)
+      val (df, plan) = WithRangeSort(spark) {
+        val df = fn(spark, sf)
+        (df, df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
+      }
       if (sortBelow(df.queryExecution.optimizedPlan)) interiorSorted += name
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val atDefault = nodes(org.apache.spark.sql.graftbridge.Bridge
+        .ofRows(spark, df.queryExecution.logical).queryExecution.executedPlan)
+      val sortFed = atDefault.collect { case s: SortExec if s.global => s.child }
+        .filter(singlePartition)
+      assert(sortFed.size <= 1 && atDefault.count(singlePartition) - sortFed.size ==
+        nodes(df.queryExecution.executedPlan).count(singlePartition),
+        s"$name: a default-conf single-partition exchange is not a root sort's:\n" +
+          atDefault.head.treeString)
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian product:\n$plan")
       if (!bnljOk(name))
         assert(!plan.contains("BroadcastNestedLoopJoin"),
@@ -640,7 +667,8 @@ class QueryPackSpec extends AnyFunSuite {
     val docs = Tables(spark, sf).documents
     val shuffled = Curation.corpusShuffleOn(docs)
     // sharded windows, never a global one — same contract as seq_pack
-    assert(!shuffled.queryExecution.executedPlan.toString.contains("SinglePartition"),
+    val plan = WithRangeSort(spark)(shuffled.queryExecution.executedPlan.toString)
+    assert(!plan.contains("SinglePartition"),
       "corpus_shuffle plan has a single-partition exchange")
     val a = shuffled.collect()
     val b = Curation.corpusShuffleOn(docs).collect()
@@ -742,7 +770,7 @@ class QueryPackSpec extends AnyFunSuite {
       "dedup_lines" -> operators.Text.dedupLines(spark, sf),
       "dedup_incremental" -> operators.Text.dedupIncremental(spark, sf)
     ).foreach { case (name, df) =>
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = WithRangeSort(spark)(df.queryExecution.executedPlan.toString)
       assert(!plan.contains("SinglePartition"),
         s"$name plans a single-partition exchange:\n$plan")
     }
@@ -751,8 +779,8 @@ class QueryPackSpec extends AnyFunSuite {
     // sized, corpus-independent). The corpus itself must never feed
     // one: every corpus-side exchange is the lang aggregation or the
     // output sort.
-    val pm = operators.Curation.sampleMixture(spark, sf)
-      .queryExecution.executedPlan.toString
+    val pm = WithRangeSort(spark)(operators.Curation.sampleMixture(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(pm.split("Exchange SinglePartition").length - 1 == 1,
       s"sample_mixture: expected exactly the one strata-min single-partition exchange:\n$pm")
   }
@@ -929,7 +957,8 @@ class QueryPackSpec extends AnyFunSuite {
       s"winnow density $density far from 2/(w+1)=${2.0 / (w + 1)}")
     // plan shape: winnowing is map-side inside the scan stage — the
     // only exchange is the output sort's range partitioning
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = WithRangeSort(spark)(df.queryExecution.executedPlan.toString)
+      .split("== Initial Plan ==")(0)
     assert(plan.split("Exchange").length - 1 == 1,
       s"fingerprint_winnow should shuffle only for the output sort:\n$plan")
     assert(!plan.contains("SinglePartition"), s"single-partition exchange:\n$plan")
