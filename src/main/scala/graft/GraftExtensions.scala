@@ -9,12 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions as SQL functions, so `spark.sql("... cosine_sim(a, b)
   * ...")` works next to the Column API — the standard way a Spark
   * library plugs into Catalyst
-  * (`spark.sql.extensions=graft.GraftExtensions`). It also adds the
-  * [[graft.plans.TopKPerKey]] planner strategy and two optimizer
-  * rules: [[graft.plans.ProjectThroughTopKPerKey]] (prune columns below
-  * the heap) and [[graft.plans.SmallSort]] (a small root global sort
+  * (`spark.sql.extensions=graft.GraftExtensions`). It also adds one
+  * optimizer rule, [[graft.plans.SmallSort]] (a small root global sort
   * sorts in one partition, without the range exchange's sampling
-  * job).
+  * job), and no planner strategy: top-k per key runs on Spark's own
+  * `WindowGroupLimit` ([[graft.plans.TopK]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def binary(name: String)(mk: (Expression, Expression) => Expression)
@@ -34,8 +33,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       binary("dot_product")(DotProduct)))
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    e.injectOptimizerRule(_ => graft.plans.ProjectThroughTopKPerKey)
     e.injectOptimizerRule(_ => graft.plans.SmallSort)
   }
 }

@@ -932,7 +932,7 @@ object SparkEntry {
     // quality-aware survivorship: the dedup_clusters transitive
     // closure + the two quality oracles, keeper = per-cluster argmax
     // (rule gate DESC, score DESC, doc_id) — the oracle may use the
-    // native window (oracle side only; the engine runs the heap)
+    // native window, as the engine does through TopK.topKPerKey
     "dedup_keepbest" -> {
       val card = """b AS (
         |  SELECT dc.doc_id, dc.cluster_id, CAST(gq.keep AS BIGINT) AS gq, qs.score
@@ -2295,7 +2295,7 @@ object SparkEntry {
         |  GROUP BY 1, 2),
         |${pqRefineTail(10, 4)}""".stripMargin,
 
-    // the ann_topk scan without the heap: threshold on the rounded
+    // the ann_topk scan without the top-k: threshold on the rounded
     // cosine (ulp-stable cut on both engines)
     "ann_radius" -> {
       val t = operators.SimilaritySearch.RadiusSimThreshold
@@ -3569,7 +3569,7 @@ object SparkEntry {
     },
 
     // same tokenization, same posting cap; row_number replicates the
-    // TopKPerKey truncation order (doc_id asc)
+    // topKPerKey truncation order (doc_id asc)
     "inverted_index" -> {
       val cap = operators.Text.IndexPostingsCap
       s"""WITH tok AS (
@@ -4050,7 +4050,7 @@ object SparkEntry {
     },
 
     // same url fixture + score lattice as domain_stats; the window
-    // formulation is the oracle for the TopKPerKey physical operator
+    // formulation is the oracle for topKPerKey
     "domain_topk" ->
       s"""WITH u AS (
         |  SELECT doc_id,

@@ -690,7 +690,7 @@ object Multimodal {
     * machinery — the doc_embed kernel on both towers, the ann_lsh
     * hyperplane-lattice tables with the integer width law sized from
     * the MEDIA corpus, hamming ≤ 2 multi-probe, exact-cosine re-rank
-    * on candidates only, per-query top-k on the bounded heap. The
+    * on candidates only, per-query top-k via [[graft.plans.TopK]]. The
     * PAIRED media item (same doc) is the ground-truth hit, retrieval
     * style (text→image recall@k grading), so self-matches are KEPT
     * and flagged — `paired` = 1 marks the query's own media.
@@ -721,15 +721,15 @@ object Multimodal {
       .select(col("qid"), col("qv"), col("t"),
         explode(array(masks.map(m => col("sig").bitwiseXOR(lit(m))): _*)).as("sig"))
     // score in the JOIN's stage and drop both vectors BEFORE any
-    // exchange (round 15, the knn_graph r13 in-heap-dedupe play): the
+    // exchange (round 15, the knn_graph r13 dedupe-in-top-k play): the
     // old plan ran DISTINCT over candidate rows still carrying the
     // two 64-dim arrays — at sf0.1 a ~500k-row × ~1 KB/row shuffle
     // that dominated the query (measured ~3.5 s of its 4.3 s). A
     // duplicate (qid, media_id) candidate — same pair from several
     // tables/probes — scores to the IDENTICAL sim (pure function of
-    // the two vectors), so TopKPerKey's dedupe collapses duplicates
-    // in the heap and the result is unchanged; the redundant scoring
-    // flops are noise next to the exchange they replace.
+    // the two vectors), so topKPerKey's dedupe collapses duplicates
+    // after the rank filter and the result is unchanged; the redundant
+    // scoring flops are noise next to the exchange they replace.
     val scored = corpus.join(broadcast(qSig),
         corpus("t") === qSig("t") && corpus("sig") === qSig("sig"))
       .select(col("qid"), col("media_id"), col("mime"),

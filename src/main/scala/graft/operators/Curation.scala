@@ -328,10 +328,10 @@ object Curation {
   /** sample_quota — exact per-stratum quotas: exactly K documents
     * per language (or all of a smaller stratum), selected by seeded
     * hash order so the draw is uniform, deterministic, and stable
-    * under corpus growth in expectation. Runs on the engine's own
-    * [[graft.plans.TopKPerKey]] operator — bounded per-key heaps,
-    * one shuffle on lang, NO per-stratum sort — so the quota draw
-    * costs the same as any grouped aggregation at 100 TB. Oracle:
+    * under corpus growth in expectation. Runs on
+    * [[graft.plans.TopK]] (Spark's `WindowGroupLimit`): each map task
+    * keeps ≤ K rows per language before the one shuffle on lang, so
+    * no stratum lands whole on one task. Oracle:
     * row_number over the same hash order.
     */
   def sampleQuota(spark: SparkSession, dir: String, k: Int = 40): DataFrame = {

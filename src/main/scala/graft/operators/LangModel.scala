@@ -312,7 +312,7 @@ object LangModel {
     * Scale shape: both count tables aggregate down to ≤
     * [[DsirBuckets]] rows (constant metadata); scoring is one
     * equi-join on the bucket id with fan-out 1; selection is the
-    * [[graft.plans.TopK]] bounded-heap operator (map-side collapse
+    * [[graft.plans.TopK]] rank filter (map-side collapse
     * to ≤ [[DsirQuota]] rows per lang) + a doc_id membership join —
     * never a corpus-sized lang-partitioned window, lang cardinality
     * being semantic.
@@ -346,13 +346,12 @@ object LangModel {
       .agg(count(lit(1)).as("n_grams"), sum(col("r_ppm")).as("sum_ppm"))
       .select(col("doc_id"), col("lang"), col("n_grams"),
         expr("sum_ppm div n_grams").as("dsir_ppm"))
-    // selection flag via the engine's own TopKPerKey (bounded
-    // per-key heaps), NOT row_number over Window.partitionBy(lang):
-    // lang cardinality is semantic (a handful of languages), so the
-    // window form would put corpus/|langs| rows on single tasks —
-    // the shard_balance bounded-key hazard. The heap pass collapses
-    // map-side to ≤ DsirQuota rows per lang; membership joins back
-    // on the unique doc_id.
+    // selection flag via TopK.topKPerKey: lang cardinality is
+    // semantic (a handful of languages), so a plain window would put
+    // corpus/|langs| rows on single tasks — the shard_balance
+    // bounded-key hazard. Its rank filter plans as WindowGroupLimit,
+    // which collapses map-side to ≤ DsirQuota rows per lang before
+    // the exchange; membership joins back on the unique doc_id.
     val top = graft.plans.TopK.topKPerKey(
         weighted.select(col("doc_id"), col("lang"), col("dsir_ppm")),
         keys = Seq(col("lang")),

@@ -223,12 +223,12 @@ object Quality {
     * bit-identical to the two standalone operators while cutting a
     * full corpus scan AND one of the two doc_id shuffle joins; at
     * 100 TB the quality side of this query is one map stage + one
-    * join, not two of each), and the per-cluster argmax on the
-    * bounded heap ([[graft.plans.TopK]], k = 1) — a boilerplate
-    * cluster holding 10% of the corpus is exactly the group a
-    * cluster_id window would serialize on one task; the heap tracks
-    * one row per cluster per partition map-side. The best-id join
-    * back is cluster-keyed, output-sized.
+    * join, not two of each), and the per-cluster argmax on
+    * [[graft.plans.TopK]] (k = 1) — a boilerplate cluster holding 10%
+    * of the corpus is exactly the group a plain cluster_id window
+    * would serialize on one task; Spark's `WindowGroupLimit` keeps one
+    * row per cluster per partition map-side. The best-id join back is
+    * cluster-keyed, output-sized.
     */
   def dedupKeepbest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents

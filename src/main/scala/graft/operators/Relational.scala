@@ -314,11 +314,10 @@ object Relational {
       .orderBy(col("user_id"), col("ts_ms"), col("event_id"))
   }
 
-  /** q18_topk_custom — q6's top-3-per-supplier via the engine's own
-    * [[graft.plans.TopKPerKey]] operator: bounded per-key heap,
-    * shuffle-only (no partition sort). Same rows as the window
-    * formulation; the physical plan contains TopKPerKeyExec and no
-    * Sort below it.
+  /** q18_topk_custom — q6's top-3-per-supplier via
+    * [[graft.plans.TopK]]: the same rows as the window formulation,
+    * planned as Spark's `WindowGroupLimit`, a partial limit below the
+    * exchange on the supplier key and a final one above it.
     */
   def q18(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables(spark, dir).lineitem

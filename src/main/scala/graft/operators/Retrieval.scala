@@ -59,11 +59,12 @@ object Retrieval {
     * rows are (query term × holding doc) pairs — and df comes from
     * that same pruned set (it holds exactly the docs containing each
     * query term), never from a corpus-wide term table. The final
-    * shortlist runs on the engine's own [[graft.plans.TopKPerKey]]
-    * bounded-heap operator — never a per-query sort of the scored
-    * corpus. (A first cut built the full inverted_index-style
-    * (term, doc, tf) table — three full-token shuffles, 6-9 s at
-    * sf0.1; the pruned form measures ~1 s with identical output.)
+    * shortlist runs on [[graft.plans.TopK]] (Spark's
+    * `WindowGroupLimit`), which cuts each query to k rows per map
+    * task before the exchange. (A first cut built the full
+    * inverted_index-style (term, doc, tf) table — three full-token
+    * shuffles, 6-9 s at sf0.1; the pruned form measures ~1 s with
+    * identical output.)
     */
   def bm25Search(spark: SparkSession, dir: String): DataFrame =
     bm25SearchOn(Tables(spark, dir).documents)
@@ -160,7 +161,7 @@ object Retrieval {
     * Scale shape: both constituent rankings keep their own
     * contracts — BM25's pruned token stream (only query-term rows
     * shuffle) and the dense side's map-only broadcast-query scan
-    * with [[graft.plans.TopKPerKey]] bounded heaps — and the fusion
+    * with [[graft.plans.TopK]] shortlists — and the fusion
     * itself runs on two ≤ q·k-row shortlists (a metadata-sized
     * full-outer join), so at 100 TB the fusion stage costs nothing
     * beyond its inputs. One documents scan feeds BOTH sides' query
@@ -254,7 +255,7 @@ object Retrieval {
     * both MaxSim reductions (max over doc chunks, sum over query
     * chunks) are map-side-combinable aggregates, so the shuffle
     * carries ≤ one row per (query, doc) key; shortlist via
-    * [[graft.plans.TopKPerKey]]. An IVF-routed candidate cut
+    * [[graft.plans.TopK]]. An IVF-routed candidate cut
     * (score only cells the query probes — [[SimilaritySearch.annIvf]])
     * composes upstream when corpus_chunks · q outgrows the scan.
     */

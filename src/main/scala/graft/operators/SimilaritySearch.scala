@@ -40,8 +40,8 @@ object SimilaritySearch {
     val scored = emb.join(broadcast(q), col("vec_id") =!= col("qid"))
       .withColumn("sim", cosineSim(col("qv"), col("v")))
       .select(col("qid"), col("vec_id"), col("sim"))
-    // top-k via the engine's heap operator (no per-query sort of the
-    // full scored corpus); ranks assigned afterwards over k×q rows
+    // top-k via TopK (k rows per query per map task before the
+    // exchange); ranks assigned afterwards over k×q rows
     val topk = graft.plans.TopK.topKPerKey(scored,
       keys = Seq(col("qid")),
       order = Seq(col("sim").desc, col("vec_id").asc), k = k)
@@ -62,7 +62,7 @@ object SimilaritySearch {
     * radius-query complement of [[annTopK]] (dedup wants "everything
     * closer than τ", not a fixed k — a hub query legitimately has
     * thousands of neighbors, an outlier none). Same scale shape as
-    * ann_topk MINUS the heap: queries broadcast, ONE map-only pass
+    * ann_topk MINUS the top-k: queries broadcast, ONE map-only pass
     * with the codegen cosine kernel and the threshold filter INSIDE
     * the scan stage — the corpus never shuffles, output is bounded
     * by the true neighbor count (no per-query window at all).
@@ -111,10 +111,10 @@ object SimilaritySearch {
     * The FORWARD top-k over the q·n scored frame is qid-partitioned —
     * each of the ≤ q groups holds the ENTIRE pool, so a window there
     * would put n rows on one task (the shard_balance/q41 bounded-key
-    * hazard); it runs on the engine's bounded-heap operator
-    * ([[graft.plans.TopK]]) instead, which tracks k rows per key per
-    * partition map-side. The BACKWARD k-NN window partitions by yid —
-    * n groups of ≤ q rows each, cardinality-safe as a window — and
+    * hazard); it runs on [[graft.plans.TopK]] instead, whose
+    * `WindowGroupLimit` keeps k rows per key per partition map-side.
+    * The BACKWARD k-NN window partitions by yid — n groups of ≤ q
+    * rows each, cardinality-safe as a window — and
     * the two margin-argmax windows run over the ≤ k·q candidate
     * frame. The card is ≤ q rows.
     */
@@ -131,7 +131,7 @@ object SimilaritySearch {
         round(cosineSim(col("qv"), col("yv")) * 1000000, 0).cast("long"))
       .select(col("qid"), col("yid"), col("c"))
       .materialized // forward top-k + backward top-k consumers
-    // forward top-k on the bounded heap, NOT a qid window: a qid
+    // forward top-k via TopK, NOT a plain qid window: a qid
     // partition of `scored` is pool-sized (n/2 rows on one task)
     val fwd = graft.plans.TopK.topKPerKey(scored,
         keys = Seq(col("qid")),
@@ -328,7 +328,7 @@ object SimilaritySearch {
     // per-query candidates are ≈ nprobe·IvfCellTarget under the cell
     // law (∝ n/IvfMaxCells past the cap), but a hot cell can still
     // concentrate them, so ranking never runs as a plain qid window —
-    // bounded heap first (map-side k per key), then the rank window
+    // TopK first (map-side k per key), then the rank window
     // runs over ≤ k·q rows (the annTopKOn convention)
     val scored = cells.join(broadcast(qCells), Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
@@ -544,7 +544,7 @@ object SimilaritySearch {
     * from: the full scan touches only codes (bytes/vector); floats
     * are read for refine·k·q rows, a constant.
     *
-    * Both stages run on the engine's bounded-heap operator with
+    * Both stages run on [[graft.plans.TopK]] with
     * (distance asc, vec_id) order — deterministic end to end.
     * Rows-only (recall vs the exact baseline asserted in
     * DedupAnnSpec — ADC candidate generation is approximate).
@@ -577,7 +577,7 @@ object SimilaritySearch {
       s"(acc, m) -> acc + dt[m * $cbSize + CAST(codes[m] AS INT)])")
 
   /** Shared tail of [[annPq]]/[[annIvfPq]]: keep the refine·k best
-    * ADC candidates per query (bounded heap), re-rank them by EXACT
+    * ADC candidates per query ([[graft.plans.TopK]]), re-rank them by EXACT
     * integer lattice L2 — floats are fetched for the refine·k·q
     * candidate rows only (candidates broadcast; the corpus is the
     * streamed side), and ADC + exact L2 share the lattice so the two
@@ -617,7 +617,7 @@ object SimilaritySearch {
     * Everything is composition: the [[ivfCells]]-law quantizer and
     * [[ivfCellId]] cell routing from [[annIvf]]; the codebook, [[graft.functions.PQCodes]]
     * storage and [[graft.functions.PQDistTable]] scoring from
-    * [[annPq]]; the bounded-heap top-k from [[graft.plans.TopK]].
+    * [[annPq]]; the top-k from [[graft.plans.TopK]].
     * Rows-only (two approximations stack: cell pruning + ADC;
     * recall vs exact lattice-L2 asserted in DedupAnnSpec).
     */
@@ -742,8 +742,8 @@ object SimilaritySearch {
     * probes every signature within hamming ≤ 2 of its own (1 + p +
     * C(p,2) masks/table, generated combinatorially and broadcast —
     * grows O(log² n), never with the corpus). Exact cosine re-ranks
-    * candidates only, with per-query top-k on the engine's bounded
-    * heap ([[graft.plans.TopK]]) rather than a qid window. This is
+    * candidates only, with per-query top-k via [[graft.plans.TopK]]
+    * rather than a plain qid window. This is
     * the 100 TB path: corpus-side work is one signature pass + bucket
     * join, never an n×q scoring sweep; recall/cost tunes via probe
     * radius without touching the corpus layout.
@@ -780,7 +780,7 @@ object SimilaritySearch {
     // score in the join's stage and drop both vectors BEFORE any
     // exchange; duplicate (qid, vec_id) candidates from different
     // tables/probes score identically (sim is a pure function of the
-    // two vectors), so TopKPerKey's in-heap dedupe replaces the old
+    // two vectors), so topKPerKey's dedupe replaces the old
     // DISTINCT — which shuffled every candidate still carrying two
     // 64-dim arrays (the mm_crossmodal round-15 measurement: the
     // vector-laden exchange dominated the query).
@@ -890,7 +890,7 @@ object SimilaritySearch {
     * the corpus shuffles once per table on (table, signature),
     * buckets self-join (skew-capped by [[KnnBucketCap]]), exact
     * cosine re-ranks candidates only, and per-source top-k runs on
-    * the engine's bounded-heap operator. Oracle-pass (round-11
+    * [[graft.plans.TopK]]. Oracle-pass (round-11
     * promotion): the integer-lattice signature relation, bucket
     * join and re-rank replay in SQL; recall vs the brute-force
     * graph additionally asserted in DedupAnnSpec.
@@ -937,9 +937,8 @@ object SimilaritySearch {
     // nearly-all-unique dedup aggregate cost ~4 s there — an extra
     // full shuffle + hash agg of the candidate table that at 100 TB
     // is the stage bottleneck. Duplicate (src, dst) pairs carry the
-    // SAME deterministic cosine, so the bounded heap collapses them
-    // in-place (topKPerKey's dedupe contract) for one ≤ k-entry set
-    // probe per row.
+    // SAME deterministic cosine, so topKPerKey's dedupe collapses
+    // them after the rank filter, over ≤ k distinct pairs per src.
     val hamming0 = indexed.as("a").join(indexed.as("b"),
         col("a.t") === col("b.t") && col("a.sig") === col("b.sig") &&
           col("a.vec_id") =!= col("b.vec_id"))
@@ -953,7 +952,7 @@ object SimilaritySearch {
     // admitted set broadcasts); the probe self-join mirrors the
     // hamming-0 join with b.sig = a.sig ⊕ m — XOR is symmetric, so
     // one join per admitted mask yields both pair directions, and
-    // cross-arm duplicates collapse in the heap like cross-table
+    // cross-arm duplicates collapse in topKPerKey's dedupe like cross-table
     // ones. Below the dense threshold the arm is absent from the
     // plan entirely (gate corpora byte-identical).
     val candidates = if (n > denseN) {

@@ -1280,10 +1280,10 @@ object Text {
     * The scale hazard is the posting list itself: a stopword's list
     * IS the corpus, so building lists with a bare collect_list makes
     * the hottest term materialize one corpus-length array in one
-    * task. Truncation happens BEFORE collection on the engine's own
-    * [[graft.plans.TopKPerKey]] operator — bounded per-key heaps,
-    * map-side, no per-term sort — so no task ever holds more than
-    * the cap, at any corpus size and any term skew. The df/tf stats
+    * task. Truncation happens BEFORE collection, in
+    * [[graft.plans.TopK]]'s rank filter (Spark's `WindowGroupLimit`),
+    * so no list ever holds more than the cap, at any corpus size and
+    * any term skew. The df/tf stats
     * stay exact (they aggregate scalars, where skew is absorbed by
     * partial aggregation, not arrays).
     */
@@ -1297,7 +1297,7 @@ object Text {
     // raw tokens by term would funnel a stopword's whole token
     // stream through one task. The term×doc result is then
     // re-partitioned by term once and eagerly localCheckpoint'd: the
-    // stats aggregate, the TopKPerKey truncation, and the final join
+    // stats aggregate, the top-k truncation, and the final join
     // all consume that partitioning with no further shuffle (term×doc
     // rows, already orders of magnitude smaller than the token
     // stream). localCheckpoint preserves the physical partitioning
@@ -1925,11 +1925,11 @@ object Text {
     * host (the exemplar shortlist a curation reviewer reads next to
     * [[domainStats]]'s aggregates): host from the map-side
     * [[withUrlColumns]] (no keeper window — top-k doesn't need it),
-    * ranked by quality score through the engine's own
-    * [[graft.plans.TopKPerKey]] operator — bounded per-key heaps,
-    * map-side collapse to ≤ k rows per host before the exchange,
-    * NEVER a per-host sort of the corpus. The final rank window runs
-    * on the ≤ k·hosts survivors (metadata-sized).
+    * ranked by quality score through [[graft.plans.TopK]] (Spark's
+    * `WindowGroupLimit`): each map task keeps ≤ k rows per host
+    * before the exchange, so a big host never lands whole on one
+    * task. The final rank window runs on the ≤ k·hosts survivors
+    * (metadata-sized).
     */
   def domainTopk(spark: SparkSession, dir: String): DataFrame =
     domainTopkOn(Tables(spark, dir).documents)

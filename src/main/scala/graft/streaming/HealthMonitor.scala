@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.HealthFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.sql.Row
 
@@ -138,7 +138,12 @@ object HealthMonitor {
     "topic" -> topic,
     "checkpointLocation" -> checkpoint)
 
-  /** Kafka sink for the alert topic (flink_job.py:131-143). */
+  /** Kafka sink for the alert topic (flink_job.py:131-143). It keeps
+    * Spark's default trigger, which starts the next micro-batch as
+    * soon as the last one ends, so a window's alert leaves once the
+    * watermark passes the window's end, as in the reference's Flink
+    * job.
+    */
   def kafkaSink(
       alertsJson: DataFrame,
       bootstrap: String = "localhost:9092",
@@ -148,7 +153,6 @@ object HealthMonitor {
       .format("kafka")
       .options(kafkaSinkOptions(bootstrap, topic, checkpoint))
       .outputMode("append")
-      .trigger(Trigger.ProcessingTime("5 seconds"))
 
   /** Test/debug sink: in-memory table, synchronous drain. */
   def memorySink(alerts: DataFrame, name: String, mode: String = "append"): StreamingQuery =

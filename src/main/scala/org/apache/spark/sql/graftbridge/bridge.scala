@@ -17,19 +17,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** DataFrame from a LogicalPlan (runs the full analyzer), for
-    * libraries that ship their own logical nodes.
+  /** DataFrame from a LogicalPlan on `spark` (runs the full
+    * analyzer): how [[graft.PlanScope.rebind]] moves a frame's plan
+    * to another session.
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Eagerly-converted Catalyst expression (UnresolvedAttribute etc.)
-    * rather than the lazy ColumnNodeExpression wrapper `expression`
-    * returns — custom logical nodes need the real tree, because the
-    * wrapper reports itself resolved and then fails at runtime.
-    */
-  def catalystExpression(c: Column): Expression =
-    classic.ColumnNodeToExpressionConverter(c.node)
 
   /** Conf-isolated twin of `spark`: same SparkContext, shared
     * external catalog and cached data, and — unlike `newSession()` —

@@ -211,11 +211,11 @@ class CurationCardsSpec extends AnyFunSuite {
 
   // ---- domain_topk ----
 
-  test("domain_topk equals the window formulation and plans TopKPerKeyExec") {
+  test("domain_topk equals the window formulation and plans WindowGroupLimit") {
     import org.apache.spark.sql.expressions.Window
     val df = Text.domainTopk(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"expected the custom operator:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
     val scored = Text.qualityScore(spark, sf).select(col("doc_id"), col("score"))
     val hosts = Text.urlNormalize(spark, sf)
       .withColumn("host", regexp_extract(col("url_norm"), "^[a-z]+://([^/:?#]+)", 1))

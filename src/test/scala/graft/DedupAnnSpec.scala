@@ -68,7 +68,7 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(lshPlanesPerTable(0) == 2)           // width floor on tiny corpora
     val plan = graft.operators.SimilaritySearch.annLsh(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"bounded-heap top-k missing:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"ann_lsh degenerated to an unbucketed join:\n$plan")
   }
@@ -359,7 +359,7 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(knnPlanesPerTable(1L << 62) == 24)        // cap still binds
     val plan = graft.operators.SimilaritySearch.knnGraph(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"bounded-heap top-k missing:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"knn_graph degenerated to an unbucketed pair join:\n$plan")
   }

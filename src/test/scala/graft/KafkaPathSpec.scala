@@ -1,6 +1,8 @@
 package graft
 
 import graft.streaming.HealthMonitor
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kafka-path coverage, honestly scoped: the spark-sql-kafka
@@ -33,6 +35,24 @@ class KafkaPathSpec extends AnyFunSuite {
     assert(o("topic") == "heart_rate_alerts")
     assert(o("kafka.bootstrap.servers") == "localhost:9092")
     assert(o.contains("checkpointLocation"))
+  }
+
+  test("the alert sink runs on Spark's default trigger, not a fixed interval") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[String]
+    val dir = java.nio.file.Files.createTempDirectory("kafka_sink_trigger")
+    // the Kafka writer as built, retargeted at a memory table: the
+    // trigger is the writer's own, the format is not
+    val q = HealthMonitor.kafkaSink(
+        HealthMonitor.alertJson(HealthMonitor.alerts(input.toDF().toDF("value"))),
+        checkpoint = dir.resolve("checkpoint").toString)
+      .format("memory").queryName("kafka_sink_trigger").start()
+    try assert(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger == Trigger.ProcessingTime(0L))
+    finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
   }
 
   test("source builder fails ONLY on the absent connector jar (documented sandbox boundary)") {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sample_weighted convention — the oracle at sf0.01 is the driver's
   * gate, these prove the formulas themselves), ranking semantics
   * (tf monotonicity, length penalty, late-interaction vs dilution),
-  * and the bounded-heap plan shape.
+  * and the shortlist plan shape (Spark's WindowGroupLimit).
   */
 class RetrievalSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
@@ -143,7 +143,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("bm25: bounded-heap shortlist in the plan, no cartesian") {
     val df = operators.Retrieval.bm25Search(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.contains("TopKPerKey"), s"bounded-heap top-k missing:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
     assert(!plan.contains("CartesianProduct"))
   }
 
@@ -199,7 +199,7 @@ class RetrievalSpec extends AnyFunSuite {
       assert(scores.forall(_ >= 0L), "ReLU clamp: no negative scores")
     }
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.contains("TopKPerKey"), s"bounded-heap top-k missing:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
   }
 
   // ---- hybrid_search ----
@@ -286,7 +286,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("hybrid: bounded-heap shortlists in the plan, corpus side never cartesian-paired") {
     val df = operators.Retrieval.hybridSearch(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.contains("TopKPerKey"), s"bounded-heap top-k missing:\n$plan")
+    TopKPerKeySpec.assertGroupLimit(plan)
     assert(!plan.contains("CartesianProduct"), "dense scan must broadcast the query side")
   }
 

@@ -57,7 +57,8 @@ class TaskFailureSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   for ((name, table) <- Seq("pagerank" -> "lineitem", "k_core" -> "lineitem",
-      "dedup_clusters" -> "documents", "graph_communities" -> "lineitem"))
+      "dedup_clusters" -> "documents", "graph_communities" -> "lineitem",
+      "bpe_train" -> "documents", "dedup_eval" -> "documents"))
     test(s"$name: a failed scan task is retried to the clean rows under both strategies") {
       val clean = rows(SparkEntry.queries(name)(spark, sf))
       for (strategy <- Seq("localCheckpoint", "checkpoint")) {

@@ -4,7 +4,9 @@ import graft.plans.TopK
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge-case behavior of the custom TopKPerKey operator. */
+/** Edge-case behavior of [[TopK.topKPerKey]], the rank filter that
+  * Spark plans as `WindowGroupLimit`.
+  */
 class TopKPerKeySpec extends AnyFunSuite {
   lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
@@ -46,137 +48,17 @@ class TopKPerKeySpec extends AnyFunSuite {
     assert(out.count() == 0)
   }
 
-  test("metrics report the k×keys memory footprint (many keys)") {
-    import spark.implicits._
-    val nKeys = 20000
-    val in = spark.range(100000)
-      .select((col("id") % nKeys).as("k"), col("id"), (col("id") % 97).cast("double").as("score"))
-    val out = TopK.topKPerKey(in, Seq(col("k")),
-      Seq(col("score").desc, col("id").asc), k = 2)
-    // collect() (not count()) so the inspected queryExecution is the
-    // one that actually ran — count() builds a separate plan
-    assert(out.collect().length == 2 * nKeys)
-    // AQE wraps stages in AdaptiveSparkPlanExec / QueryStageExec whose
-    // inner plan is a field, not a child — recurse through them
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def findExecs(p: SparkPlan): Seq[graft.plans.TopKPerKeyExec] = p match {
-      case a: AdaptiveSparkPlanExec => findExecs(a.executedPlan)
-      case q: QueryStageExec => findExecs(q.plan)
-      case e: graft.plans.TopKPerKeyExec => e +: e.children.flatMap(findExecs)
-      case other => other.children.flatMap(findExecs)
-    }
-    val execs = findExecs(out.queryExecution.executedPlan)
-    assert(execs.nonEmpty, "TopKPerKeyExec missing from executed plan")
-    val m = execs.head.metrics
-    assert(m("numKeys").value == nKeys)
-    assert(m("heapRows").value == 2L * nKeys,
-      s"heapRows=${m("heapRows").value}") // the O(k×keys) bound, metered
-  }
-
-  test("guard fails fast when a task would hold more than the configured row bound") {
-    import spark.implicits._
-    val key = graft.plans.TopKPerKeyExec.MaxRowsKey
-    spark.conf.set(key, "100")
-    // a parquet scan exposes only sizeInBytes (no row count), so the
-    // compile-time strategy can't see the violation coming; with AQE
-    // disabled there is no runtime re-plan either — the RUNTIME guard
-    // is the last line this test pins (stats-rich inputs are caught by
-    // the strategy fallback, AQE re-plans are covered below)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val dir = java.nio.file.Files.createTempDirectory("topk_guard").toString
-    try {
-      spark.range(10000)
-        .select((col("id") % 5000).as("k"), col("id"), col("id").cast("double").as("score"))
-        .write.mode("overwrite").parquet(dir)
-      val in = spark.read.parquet(dir)
-      val out = TopK.topKPerKey(in, Seq(col("k")), Seq(col("score").desc), k = 2)
-      val e = intercept[Throwable] { out.count() }
-      def chain(t: Throwable): List[Throwable] =
-        if (t == null) Nil else t :: chain(t.getCause)
-      assert(chain(e).exists(t =>
-        t.isInstanceOf[IllegalStateException] &&
-          t.getMessage.contains(key)),
-        s"expected the $key guard, got: $e")
-    } finally {
-      spark.conf.unset(key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
-  test("AQE runtime stats swap the heap for the window form mid-query (no guard trip)") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def findExecs(p: SparkPlan): Seq[graft.plans.TopKPerKeyExec] = p match {
-      case a: AdaptiveSparkPlanExec => findExecs(a.executedPlan)
-      case q: QueryStageExec => findExecs(q.plan)
-      case e: graft.plans.TopKPerKeyExec => e +: e.children.flatMap(findExecs)
-      case other => other.children.flatMap(findExecs)
-    }
-    val key = graft.plans.TopKPerKeyExec.MaxRowsKey
-    spark.conf.set(key, "100")
-    val dir = java.nio.file.Files.createTempDirectory("topk_aqe").toString
-    try {
-      spark.range(10000)
-        .select((col("id") % 5000).as("k"), col("id"), col("id").cast("double").as("score"))
-        .write.mode("overwrite").parquet(dir)
-      // same stats-blind input as the guard test, but with AQE on the
-      // post-shuffle re-optimization sees the real row count, the
-      // strategy declines, and the query finishes on the window plan
-      // instead of failing — the 100 TB safety net in action
-      val out = TopK.topKPerKey(spark.read.parquet(dir),
-        Seq(col("k")), Seq(col("score").desc, col("id").asc), k = 2)
-      val rows = out.collect()
-      assert(rows.length == 10000) // k=2 ≥ rows per key → all rows survive
-      val plan = out.queryExecution.executedPlan
-      assert(findExecs(plan).isEmpty, s"heap exec survived AQE re-plan:\n$plan")
-      assert(plan.toString.contains("Window"), s"no window fallback in final plan:\n$plan")
-    } finally {
-      spark.conf.unset(key)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
-  test("strategy plans the sort-based window form when stats say the heap bound can't hold") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def findExecs(p: SparkPlan): Seq[graft.plans.TopKPerKeyExec] = p match {
-      case a: AdaptiveSparkPlanExec => findExecs(a.executedPlan)
-      case q: QueryStageExec => findExecs(q.plan)
-      case e: graft.plans.TopKPerKeyExec => e +: e.children.flatMap(findExecs)
-      case other => other.children.flatMap(findExecs)
-    }
-    val key = graft.plans.TopKPerKeyExec.MaxRowsKey
-    spark.conf.set(key, "100")
-    try {
-      // range carries an exact row count in its stats: 10k rows over
-      // 32 shuffle partitions > 100-row bound → the strategy must
-      // decline the heap and emit the window+filter fallback
-      val in = spark.range(10000)
-        .select((col("id") % 50).as("k"), col("id"), (col("id") % 97).cast("double").as("score"))
-      val out = TopK.topKPerKey(in, Seq(col("k")), Seq(col("score").desc, col("id").asc), k = 2)
-      val rows = out.collect()
-      val plan = out.queryExecution.executedPlan
-      assert(findExecs(plan).isEmpty, s"heap exec planned despite stats over budget:\n$plan")
-      assert(plan.toString.contains("Window"), s"no window fallback in plan:\n$plan")
-      // fallback result is the same top-k contract
-      assert(rows.length == 2 * 50)
-      val best = rows.groupBy(_.getLong(0)).values.map(_.map(_.getDouble(2)).max)
-      assert(best.forall(_ >= 95.0)) // per-key max of (id % 97) over 200 ids/key
-    } finally spark.conf.unset(key)
-  }
-
   test("dedupe collapses duplicate rows exactly like DISTINCT-then-top-k") {
     import spark.implicits._
-    // duplicates both below k (would double-fill the heap) and above
-    // it (arrive after their twin was evicted — must not re-enter);
+    // duplicates inside k and outside it; in "c", distinct rows tie on
+    // score and 9's twin comes fifth in row order, outside k = 3;
     // contract: equal (k, id) rows are fully identical
     val rows = Seq(
       ("a", 1L, 9.0), ("a", 1L, 9.0), ("a", 2L, 8.0), ("a", 3L, 7.0),
       ("a", 4L, 6.0), ("a", 4L, 6.0), ("a", 5L, 5.0),
-      ("b", 1L, 1.0), ("b", 1L, 1.0))
-    // scramble arrival order so eviction-then-duplicate happens
+      ("b", 1L, 1.0), ("b", 1L, 1.0),
+      ("c", 7L, 4.0), ("c", 8L, 4.0), ("c", 8L, 4.0), ("c", 9L, 4.0), ("c", 9L, 4.0),
+      ("c", 6L, 3.0), ("c", 6L, 3.0))
     val in = scala.util.Random.shuffle(rows).toDF("k", "id", "score")
     val got = TopK.topKPerKey(in, Seq(col("k")),
         Seq(col("score").desc, col("id").asc), k = 3, dedupe = Seq(col("id")))
@@ -184,60 +66,33 @@ class TopKPerKeySpec extends AnyFunSuite {
     val want = rows.distinct.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
       rs.sortBy(r => (-r._3, r._2)).take(3).map(r => (k, r._2)) }.sorted
     assert(got == want, s"got $got want $want")
-    // and equals the engine's own distinct-then-heap form
+    // and equals the distinct-then-top-k form
     val viaDistinct = TopK.topKPerKey(in.distinct(), Seq(col("k")),
         Seq(col("score").desc, col("id").asc), k = 3)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(got == viaDistinct)
   }
 
-  test("dedupe survives the strategy's sort-based window fallback (stats over budget)") {
-    val key = graft.plans.TopKPerKeyExec.MaxRowsKey
-    spark.conf.set(key, "100")
-    try {
-      // range carries exact rowCount stats (the fallback-test play):
-      // 10k rows > the 100-row bound → window form; the union plants
-      // a duplicate of every row, which Distinct must strip before
-      // row_number ranks them
-      val base = spark.range(10000)
-        .select((col("id") % 50).as("k"), col("id"),
-          (col("id") % 97).cast("double").as("score"))
-      val in = base.unionAll(base)
-      val got = TopK.topKPerKey(in, Seq(col("k")),
-          Seq(col("score").desc, col("id").asc), k = 2, dedupe = Seq(col("id")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val want = TopK.topKPerKey(base, Seq(col("k")),
-          Seq(col("score").desc, col("id").asc), k = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == want,
-        s"window fallback must dedupe before ranking: got $got")
-    } finally spark.conf.unset(key)
+  test("dedupe adds no exchange over the rank filter's") {
+    val in = spark.range(10000)
+      .select((col("id") % 50).as("k"), col("id"), (col("id") % 97).cast("double").as("score"))
+    val out = TopK.topKPerKey(in.unionAll(in), Seq(col("k")),
+      Seq(col("score").desc), k = 2, dedupe = Seq(col("id")))
+    val plan = out.queryExecution.executedPlan.toString
+    TopKPerKeySpec.assertGroupLimit(plan)
+    assert("Exchange".r.findAllIn(plan).size == 1, s"one exchange expected:\n$plan")
+    assert(out.count() == 100)
   }
+}
 
-  test("injected rule prunes columns through TopKPerKey (heap holds only survivors)") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def findExecs(p: SparkPlan): Seq[graft.plans.TopKPerKeyExec] = p match {
-      case a: AdaptiveSparkPlanExec => findExecs(a.executedPlan)
-      case q: QueryStageExec => findExecs(q.plan)
-      case e: graft.plans.TopKPerKeyExec => e +: e.children.flatMap(findExecs)
-      case other => other.children.flatMap(findExecs)
-    }
-    val in = spark.range(1000).select(
-      (col("id") % 10).as("k"), col("id"),
-      (col("id") % 97).cast("double").as("score"),
-      concat(lit("wide-payload-"), col("id")).as("wide1"),
-      concat(lit("wider-payload-"), col("id")).as("wide2"))
-    val full = TopK.topKPerKey(in, Seq(col("k")), Seq(col("score").desc, col("id").asc), k = 3)
-    val narrow = full.select("k", "score")
-    val execs = findExecs(narrow.queryExecution.executedPlan)
-    assert(execs.nonEmpty, "expected the heap exec")
-    val heapCols = execs.head.child.output.map(_.name).toSet
-    assert(heapCols == Set("k", "id", "score"), // order col id kept, wides pruned
-      s"heap not pruned: $heapCols")
-    // semantics unchanged vs the unpruned form
-    val a = narrow.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    val b = full.collect().map(r => (r.getLong(0), r.getDouble(2))).sorted.toSeq
-    assert(a == b)
+object TopKPerKeySpec {
+  /** `plan` runs top-k per key as Spark's `WindowGroupLimit`: a
+    * `Partial` limit below the hash exchange on the key and a `Final`
+    * one above it.
+    */
+  def assertGroupLimit(plan: String): Unit = {
+    val shape = "(?s)WindowGroupLimit [^\n]*Final\n.*Exchange hashpartitioning.*WindowGroupLimit [^\n]*Partial".r
+    assert(shape.findFirstIn(plan).isDefined,
+      s"expected WindowGroupLimit Final over the key exchange over WindowGroupLimit Partial:\n$plan")
   }
 }
