@@ -1,13 +1,11 @@
 package graft
 
-import graft.streaming.{Attribution, IdempotentSink}
+import graft.streaming.Attribution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Stream-stream interval join semantics (watermark-bounded state)
-  * and exactly-once foreachBatch delivery under batch replay.
-  */
+/** Stream-stream interval join semantics (watermark-bounded state). */
 class StreamJoinSpec extends AnyFunSuite {
   lazy val spark = {
     val s = GraftSession.builder("local[4]", 4).getOrCreate()
@@ -66,52 +64,5 @@ class StreamJoinSpec extends AnyFunSuite {
       assert(!got.exists(_.getAs[Long]("purchase_id") == 900L),
         "state for a long-expired window must be gone")
     } finally q.stop()
-  }
-
-  test("idempotent foreachBatch sink: replaying a committed batch is a no-op") {
-    val out = new java.io.File("target/tmp/idem_sink")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-    }
-    rm(out); out.mkdirs()
-    val batch = spark.range(0, 100).toDF("id")
-    assert(IdempotentSink.writeBatch(batch, out.getPath, 7L))
-    // crash-retry delivers the same batchId again (possibly with the
-    // same data recomputed): must not double anything
-    assert(!IdempotentSink.writeBatch(batch, out.getPath, 7L))
-    assert(!IdempotentSink.writeBatch(batch.limit(50), out.getPath, 7L))
-    val read = spark.read.parquet(s"${out.getPath}/batch=7")
-    assert(read.count() == 100L)
-    // a NEW batch id still writes
-    assert(IdempotentSink.writeBatch(batch.limit(10), out.getPath, 8L))
-    assert(spark.read.parquet(s"${out.getPath}/batch=8").count() == 10L)
-  }
-
-  test("idempotent sink end-to-end: stream restart re-processes without duplication") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val out = "target/tmp/idem_e2e"
-    val ckpt = "target/tmp/idem_e2e_ckpt"
-    def rm(p: String): Unit = {
-      def go(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(go); f.delete()
-      }
-      go(new java.io.File(p))
-    }
-    rm(out); rm(ckpt)
-    val input = MemoryStream[Long]
-    val q1 = IdempotentSink.start(input.toDF().toDF("v"), out, ckpt)
-    try {
-      input.addData(1L, 2L, 3L)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val q2 = IdempotentSink.start(input.toDF().toDF("v"), out, ckpt)
-    try {
-      input.addData(4L, 5L)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val all = spark.read.option("basePath", out)
-      .parquet(s"$out/batch=*").select("v").as[Long].collect().sorted.toSeq
-    assert(all == Seq(1L, 2L, 3L, 4L, 5L), s"got $all")
   }
 }
